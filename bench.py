@@ -255,10 +255,11 @@ def main() -> None:
 
         # One-shot drain whose checkpoint is discarded: skip the trailing
         # no-data watermark-flush micro-batch (~35% of a warm drain,
-        # tools/stream_profile.py) — in update mode it emits zero rows and
-        # only evicts state this run never reuses (index verified
-        # byte-identical either way; see PipelineConfig.no_data_microbatch
-        # for when the flush batch IS load-bearing).
+        # `git show 33688ea:tools/stream_profile.py`) — in update mode it
+        # emits zero rows and only evicts state this run never reuses (index
+        # verified byte-identical either way; see
+        # PipelineConfig.no_data_microbatch for when the flush batch IS
+        # load-bearing).
         #
         # State-store count sized to the keyspace, per the PipelineConfig
         # rule: the sf0.1 drain holds ~21k window×type state rows, where
@@ -289,10 +290,11 @@ def main() -> None:
         n_events = spark.read.parquet(events_dir).count()
         # best-of-5 with the median recorded alongside — the same
         # discipline as the query leg. The first drain pays streaming-plan
-        # codegen (~3.5x slower, tools/stream_profile.py); with best-of-3
-        # the committed number still landed under the quiet-box reading
-        # two rounds running (r8 94.9k, r9 98.9k vs in-round 122-131k
-        # ev/s) whenever ambient load touched 2 of the 3 drains. Five
+        # codegen (~3.5x slower, `git show 33688ea:tools/stream_profile.py`);
+        # with best-of-3 the committed number still landed under the
+        # quiet-box reading two rounds running (r8 94.9k, r9 98.9k vs
+        # in-round 122-131k ev/s) whenever ambient load touched 2 of the 3
+        # drains. Five
         # samples make one quiet drain near-certain, and the median makes
         # a lucky-outlier best self-evident in the artifact.
         #

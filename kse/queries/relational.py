@@ -1387,8 +1387,8 @@ GROUP BY l_linestatus
         "hash-matches with no rounding device. Same r8 constant shave as "
         "the continuous twin (single-scan explode + checkpointed "
         "histogram): 4.48 s -> 3.08 s best-of-3 at 10x. Pass-count "
-        "profile (r10, tools/pctl_profile.py, the verdict's >8x-clean "
-        "contingency): full query 1.94 s best at 10x, of which the "
+        "profile (r10, `git show 33688ea:tools/pctl_profile.py`, the "
+        "verdict's >8x-clean contingency): full query 1.94 s best at 10x, of which the "
         "pass-1 histogram ALONE (one spillable hash aggregate over the "
         "12M-row explode, 3 jobs) is 1.19 s and 11-job dispatch is "
         "~0.33 s — no redundant pass exists; the comparator gap is the "

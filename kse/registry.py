@@ -42,12 +42,17 @@ _REGISTRY: dict[str, Query] = {}
 # DataFrame. A registered builder is a pure function of (spark, sf_dir)
 # returning a lazy plan, so re-invoking it re-pays the py4j plan-
 # construction cost (~30-140 ms/query, measured) for an identical plan.
-# Memoizing the built DataFrame is the prepared-statement path: execution
-# (and Catalyst's per-action re-optimization under AQE) is untouched, only
-# the Python-side plan build is skipped on repeat invocations. Hanging the
-# dict off the session object (not a module global) ties each cached plan
-# to exactly the session/SQLConf it was built under and lets GC reclaim it
-# with the session.
+# Memoizing the built DataFrame is the prepared-statement path: the Python-
+# side plan build is skipped on repeat invocations. Execution is untouched
+# only for writer actions (``df.write...``), which plan afresh each time.
+# ``collect``/``toArrow``/``toPandas`` on the returned DataFrame reuse its
+# first QueryExecution, materialized shuffle outputs included: a second
+# action re-runs only the final stage and never re-reads the input files.
+# A caller that needs a fresh execution must wrap the cached logical plan
+# in a new Dataset (perfbench/layers.py ``fresh_execution``) or clear the
+# cache with ``invalidate_plans``. Hanging the dict off the session object
+# (not a module global) ties each cached plan to exactly the session/SQLConf
+# it was built under and lets GC reclaim it with the session.
 
 
 def _plan_cache(spark: SparkSession) -> dict[tuple[str, str], DataFrame]:
@@ -114,110 +119,19 @@ def register(
     return _wrap
 
 
-def _category(name: str) -> str:
-    """Category key for ordering: the SURVEY §2 family a query belongs to
-    (q_join_*, q_win_*, q_llm_*, ... -> 'join', 'win', 'llm')."""
-    parts = name.split("_")
-    return parts[1] if parts[0] in ("q", "src") and len(parts) > 1 else parts[0]
-
-
-# Never-driver-sampled queries the r5 verdict requires in the r6 driver
-# prefix: the 7 remaining SURVEY §2.10 headliners and the 13 TPC-H shapes.
-# Names verified here drop out automatically (the list is filtered to the
-# still-fresh set at ordering time).
-_DRIVER_PRIORITY = [
-    "q_llm_sim_lsh_ann",
-    "q_llm_text_stats",
-    "q_llm_text_tokens",
-    "q_llm_tfidf",
-    "q_llm_multimodal",
-    "q_llm_quality_filter",
-    "q_llm_embed_stats",
-    "q_tpch_q1",
-    "q_tpch_q2",
-    "q_tpch_q9",
-    "q_tpch_q11",
-    "q_tpch_q12",
-    "q_tpch_q13",
-    "q_tpch_q15",
-    "q_tpch_q16",
-    "q_tpch_q17",
-    "q_tpch_q19",
-    "q_tpch_q20",
-    "q_tpch_q21",
-    "q_tpch_q22",
-]
-
-
-def _ordered_names() -> list[str]:
-    """Registry names ordered so a sampled prefix maximizes NEW driver
-    coverage: queries the per-round driver has never hash-verified green
-    (kse/_driver_verified.py, regenerated from the CORRECTNESS_r*.json
-    history by tools/update_driver_verified.py) come first, then the
-    already-verified remainder — each block in category round-robin so any
-    prefix still covers every SURVEY §2 family roughly evenly. Rationale:
-    the driver verifies a fixed-size prefix (50 queries) per round; with
-    175 registered queries a static ordering re-verifies the same prefix
-    forever and leaves the tail local-only. Deterministic: category order
-    and within-category order both follow registration order."""
-    from itertools import zip_longest
-
-    from kse._driver_verified import DRIVER_REQUEUE, DRIVER_VERIFIED
-
-    def round_robin(names: list[str]) -> list[str]:
-        groups: dict[str, list[str]] = {}
-        for name in names:
-            groups.setdefault(_category(name), []).append(name)
-        ordered: list[str] = []
-        for batch in zip_longest(*groups.values()):
-            ordered.extend(n for n in batch if n is not None)
-        return ordered
-
-    requeue = [n for n in _REGISTRY if n in DRIVER_REQUEUE]
-    fresh = [
-        n for n in _REGISTRY
-        if n not in DRIVER_VERIFIED and n not in DRIVER_REQUEUE
-    ]
-    seen = [n for n in _REGISTRY if n in DRIVER_VERIFIED]
-    # Round-6 prefix policy (r5 verdict items #1/#2): the never-sampled
-    # SURVEY §2.10 headliners and TPC-H shapes lead outright, then other
-    # never-sampled queries, with AT MOST ~10 re-proof (requeue) slots
-    # inside a 50-query driver prefix — r5 spent half its sample
-    # re-proving battery-changed pairs and the never-sampled pool barely
-    # shrank. Requeued pairs are all green in the local exact-value
-    # harness (stricter than the driver hash); they drain at 10/round
-    # behind the fresh burn-down.
-    priority = [n for n in _DRIVER_PRIORITY if n in fresh]
-    fresh_rest = round_robin([n for n in fresh if n not in set(priority)])
-    rq = round_robin(requeue)
-    n_fresh_lead = max(0, 40 - len(priority))
-    return (
-        priority
-        + fresh_rest[:n_fresh_lead]
-        + rq[:10]
-        + fresh_rest[n_fresh_lead:]
-        + rq[10:]
-        + round_robin(seen)
-    )
-
-
 def all_queries() -> dict[str, Query]:
     _ensure_loaded()
-    return {name: _REGISTRY[name] for name in _ordered_names()}
+    return dict(_REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:
     _ensure_loaded()
-    return {name: _REGISTRY[name].fn for name in _ordered_names()}
+    return {name: q.fn for name, q in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     _ensure_loaded()
-    return {
-        name: _REGISTRY[name].oracle
-        for name in _ordered_names()
-        if _REGISTRY[name].oracle is not None
-    }
+    return {name: q.oracle for name, q in _REGISTRY.items() if q.oracle is not None}
 
 
 _LOADED = False

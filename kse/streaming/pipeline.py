@@ -33,20 +33,21 @@ class PipelineConfig:
     # Streaming state-store count = spark.sql.shuffle.partitions AT QUERY
     # START (pinned into the checkpoint thereafter), so it must be sized to
     # the STATE keyspace — windows × event_types here. Measured at sf0.1
-    # (tools/stream_profile.py, 21k-row keyspace on local[32]): 8 stores vs
-    # 32 is throughput-neutral — fewer stores means fewer parallel commit
-    # tasks, and the per-store fixed cost only dominates when stores >>
-    # cores or state is near-empty. The knob exists because a 100 TB
-    # deployment sizes it deliberately (with a NEW checkpoint — the old one
-    # pins the old count). None = inherit the session's setting.
+    # (`git show 33688ea:tools/stream_profile.py`, 21k-row keyspace on
+    # local[32]): 8 stores vs 32 is throughput-neutral — fewer stores means
+    # fewer parallel commit tasks, and the per-store fixed cost only
+    # dominates when stores >> cores or state is near-empty. The knob
+    # exists because a 100 TB deployment sizes it deliberately (with a NEW
+    # checkpoint — the old one pins the old count). None = inherit the
+    # session's setting.
     shuffle_partitions: int | None = None
     # Spark runs one extra NO-DATA micro-batch after an availableNow drain
     # to advance the watermark and evict expired state — measured at ~35%
-    # of a warm 100k-event drain (tools/stream_profile.py: 523 ms trigger
-    # on 0 input rows vs 1182 ms for the data batch). In UPDATE output
-    # mode that batch emits ZERO rows (verified: index byte-identical with
-    # it disabled), so a drain whose checkpoint does not outlive the run
-    # (bench, one-shot exports) can skip it via
+    # of a warm 100k-event drain (`git show 33688ea:tools/stream_profile.py`:
+    # 523 ms trigger on 0 input rows vs 1182 ms for the data batch). In
+    # UPDATE output mode that batch emits ZERO rows (verified: index
+    # byte-identical with it disabled), so a drain whose checkpoint does not
+    # outlive the run (bench, one-shot exports) can skip it via
     # spark.sql.streaming.noDataMicroBatches.enabled=false. Keep the
     # default (None = inherit, Spark default ON) whenever the checkpoint
     # is reused: eviction then matters for state size, and APPEND-mode

@@ -25,6 +25,10 @@ def test_registry_shape(spark):
     assert len(qs) >= 80
     assert set(osql) <= set(qs)
     assert len(osql) >= 65  # oracle coverage stays high
+    # the driver sees the queries in registration order, oracles likewise
+    order = list(registry._REGISTRY)
+    assert list(qs) == order
+    assert list(osql) == [n for n in order if registry._REGISTRY[n].oracle is not None]
 
 
 def test_every_query_runs_on_smoke_sf(spark):
@@ -506,6 +510,18 @@ def test_scale_canary_band_drift(tmp_path):
     duck = {"q": 1.10}
     res = canary_check(duck, meds, lambda n: 1.10)
     assert not res["ok"]  # 2.08x the median with no band: flags
+
+
+def test_scale_canary_ok_skips_canaries_that_did_not_run():
+    """canary_ok combines only the canaries that ran: a skipped canary
+    records ok=None and must never read as passed."""
+    from tools.scale10 import canaries_ok
+
+    assert canaries_ok(None, None) is None
+    assert canaries_ok(None, True) is True
+    assert canaries_ok(False, None) is False
+    assert canaries_ok(True, True) is True
+    assert canaries_ok(True, False) is False
 
 
 def test_trailing_medians_excludes_invalid_comparator_columns(tmp_path):

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -421,12 +422,10 @@ def trailing_medians(
     """Per-query median of ``column`` across committed SCALE_r*.json
     artifacts at the same rows_mult — the drift reference for
     canary_check (see _trailing_values for the inclusion rules)."""
-    import statistics as _stats
-
     return {
-        q: _stats.median(v)
+        q: statistics.median(v)
         for q, v in _trailing_values(repo_root, mult, column).items()
-        if _stats.median(v) > 0
+        if statistics.median(v) > 0
     }
 
 
@@ -555,6 +554,14 @@ def canary_check(
                 f"[{lo*1000:.0f}, {hi*1000:.0f}] ms)"
             )
     return canary
+
+
+def canaries_ok(*oks: bool | None) -> bool | None:
+    """The artifact's ``canary_ok``: the ``and`` of the canaries that ran.
+    A skipped canary records ``ok`` None, and None comes back when none
+    ran, so a run that checked nothing never reads as passed."""
+    ran = [ok for ok in oks if ok is not None]
+    return all(ran) if ran else None
 
 
 def main() -> None:
@@ -717,7 +724,7 @@ def main() -> None:
         return best
 
     if once:
-        canary_spark = {"threshold": CANARY_THRESHOLD, "flagged": {}, "ok": True, "skipped": "--once"}
+        canary_spark = {"threshold": CANARY_THRESHOLD, "flagged": {}, "ok": None, "skipped": "--once"}
     else:
         canary_spark = canary_check(
             spark_t,
@@ -762,7 +769,7 @@ def main() -> None:
             # as the band canary's r11 ADVICE fixes; a genuine rebuild-
             # shaped regression adds >= one full-feed scan per lookup at
             # this tier and still lands far past 4x the median.
-            ref = sorted(prior10)[len(prior10) // 2]
+            ref = statistics.median(prior10)
             bound = 4 * ref
             status = "OK" if spark_t[_SCD2] < bound else "FAIL"
             print(
@@ -789,7 +796,7 @@ def main() -> None:
         canary = {
             "threshold": CANARY_THRESHOLD,
             "flagged": {},
-            "ok": True,
+            "ok": None,
             "skipped": "--spark-only",
         }
     else:
@@ -883,10 +890,10 @@ def main() -> None:
             else None,
             # self-describing honesty fields (r8 verdict item #2): the
             # headline ratio lives IN the artifact, and canary_ok says
-            # whether BOTH timing columns survived their drift checks
-            # (canary = comparator, both directions suspect; canary_spark
-            # = engine, upward-only since improvements drift down by
-            # design — r9)
+            # whether the timing columns that were checked survived their
+            # drift checks, null when neither was (canary = comparator,
+            # both directions suspect; canary_spark = engine, upward-only
+            # since improvements drift down by design — r9)
             "headline_ratio": round(
                 sum(spark_t[n] for n in HEADLINE)
                 / sum(duck_t[n] for n in HEADLINE),
@@ -895,7 +902,7 @@ def main() -> None:
             if all(n in duck_t for n in HEADLINE)
             and all(n in spark_t for n in HEADLINE)
             else None,
-            "canary_ok": canary["ok"] and canary_spark["ok"],
+            "canary_ok": canaries_ok(canary["ok"], canary_spark["ok"]),
             "canary": canary,
             "canary_spark": canary_spark,
         }
