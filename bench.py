@@ -261,15 +261,13 @@ def main() -> None:
         # PipelineConfig.no_data_microbatch for when the flush batch IS
         # load-bearing).
         #
-        # State-store count sized to the keyspace, per the PipelineConfig
-        # rule: the sf0.1 drain holds ~21k window×type state rows, where
-        # the session default of 32 stores means 32 near-empty store
-        # commits per batch — pure fixed cost. Measured quiet-box
-        # median-of-5 (r8): 32 stores 1.62 s, 8 -> 1.47 s, 4 -> 1.08 s,
-        # 2 -> 0.93 s, 1 -> 0.90 s; 2 keeps >1-way agg parallelism at
-        # ~the knee. A 100 TB deployment sizes this UP with its keyspace
-        # (the knob exists for exactly that); inherit-the-session is wrong
-        # in both directions.
+        # State-store count below PipelineConfig's default (one store per
+        # core): the sf0.1 drain holds ~21k window×type state rows in one
+        # micro-batch, and each store is a fixed commit cost. Measured
+        # quiet-box median-of-5 (r8, local[32]): 32 stores 1.62 s, 8 ->
+        # 1.47 s, 4 -> 1.08 s, 2 -> 0.93 s, 1 -> 0.90 s; 2 keeps >1-way
+        # agg parallelism at ~the knee. A 100 TB deployment sizes this UP
+        # with its keyspace (the knob exists for exactly that).
         stream_cfg = PipelineConfig(no_data_microbatch=False, shuffle_partitions=2)
 
         if layout_ok:

@@ -11,7 +11,10 @@ Design for a 1000-executor cluster, tested on local[N]:
   and they are all runtime decisions AQE makes better than static config.
 - ``spark.sql.shuffle.partitions`` is a *default* only — AQE coalesces it
   down at small scale and splits skewed partitions at large scale. On a real
-  cluster set it to ~2-3x total cores; here it tracks local parallelism.
+  cluster set it to ~2-3x total cores. Unless passed, it is
+  max($SPARK_GRAFT_CPUS, 8) (32 with the variable unset), whatever
+  ``master`` is: an explicit ``local[N]`` does not change it. The KSE
+  stream sizes its own state stores (kse.streaming.pipeline.PipelineConfig).
 - Arrow enabled for every pandas_udf / toPandas crossing (the vector ops in
   kse.queries.llm live on this).
 - Session timezone pinned to UTC so timestamp semantics are deterministic

@@ -15,7 +15,9 @@ idempotent per-_id upserts ⇒ effectively-once documents.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,15 +33,16 @@ class PipelineConfig:
     min_value: float = 0.0
     event_types: tuple[str, ...] = ("click", "view", "purchase", "signup", "error")
     # Streaming state-store count = spark.sql.shuffle.partitions AT QUERY
-    # START (pinned into the checkpoint thereafter), so it must be sized to
-    # the STATE keyspace — windows × event_types here. Measured at sf0.1
-    # (`git show 33688ea:tools/stream_profile.py`, 21k-row keyspace on
-    # local[32]): 8 stores vs 32 is throughput-neutral — fewer stores means
-    # fewer parallel commit tasks, and the per-store fixed cost only
-    # dominates when stores >> cores or state is near-empty. The knob
-    # exists because a 100 TB deployment sizes it deliberately (with a NEW
-    # checkpoint — the old one pins the old count). None = inherit the
-    # session's setting.
+    # START, pinned into the checkpoint's offset log thereafter (a resumed
+    # query keeps the count it was created with). None = the cluster's
+    # defaultParallelism: one task wave of store commits per micro-batch.
+    # Inheriting the session's 32 on a 4-core host spread ~20 state rows
+    # over 32 stores, 8 waves of near-empty commits per batch; sizing to
+    # the 4 cores took perfbench's stream_replay from a median 595 to 1386
+    # events/s over ten interleaved pairs (latency p50 2.24 -> 0.94 s;
+    # traced state commit 3.23 -> 0.45 s). An explicit value wins: a
+    # deployment whose keyspace outgrows one wave sizes it up, with a NEW
+    # checkpoint.
     shuffle_partitions: int | None = None
     # Spark runs one extra NO-DATA micro-batch after an availableNow drain
     # to advance the watermark and evict expired state — measured at ~35%
@@ -109,16 +112,29 @@ def run_offline(
     events = file_events(
         spark, events_dir, fmt=fmt, max_files_per_trigger=max_files_per_trigger
     )
+    # The JSON reader turns a line it cannot parse into an all-NULL row,
+    # which transform() then filters out; count those rows per micro-batch
+    # (progress.observedMetrics["kse_parse"].malformed_lines). Observed here
+    # and not in transform(), which one plan may call twice, and an
+    # observation name may be defined only once per plan.
+    events = events.observe(
+        "kse_parse",
+        F.count_if(
+            reduce(operator.and_, [F.col(c).isNull() for c in events.columns])
+        ).alias("malformed_lines"),
+    )
     docs = windowed_docs(events, cfg)
     # shuffle.partitions is read once at stream START and pinned in the
     # checkpoint; scope the state-store sizing to this query by setting it
     # around .start() and restoring the session value immediately after.
     # Same scoping for the no-data flush batch knob (see PipelineConfig).
+    partitions = cfg.shuffle_partitions
+    if partitions is None:
+        partitions = spark.sparkContext.defaultParallelism
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     _ND_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev_nd = spark.conf.get(_ND_KEY)
-    if cfg.shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     if cfg.no_data_microbatch is not None:
         spark.conf.set(_ND_KEY, str(cfg.no_data_microbatch).lower())
     try:
@@ -132,7 +148,6 @@ def run_offline(
             available_now=True,
         )
     finally:
-        if cfg.shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
         if cfg.no_data_microbatch is not None:
             spark.conf.set(_ND_KEY, prev_nd)

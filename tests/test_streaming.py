@@ -282,6 +282,52 @@ def test_pipeline_drain_without_flush_batch_is_output_identical(
     )
 
 
+def test_pipeline_counts_malformed_lines(spark, tmp_events_dir, tmp_path):
+    """A line the JSON reader cannot parse becomes an all-NULL row that
+    transform() filters out; run_offline reports each one in the
+    micro-batch's observed metrics, and the index is what the same chunk
+    without those lines gives."""
+    rows = [
+        ev(1, "2024-01-01T10:01:00Z", etype="click", value=1.0),
+        ev(2, "2024-01-01T10:02:00Z", etype="purchase", value=5.0),
+    ]
+    write_event_chunk(tmp_events_dir, "000.json", rows)
+    q = run_offline(spark, tmp_events_dir, str(tmp_path / "clean"), str(tmp_path / "ck1"))
+    q.awaitTermination(120)
+    clean = JsonlIndexer(str(tmp_path / "clean")).read_index("event_windows")
+
+    dirty_dir = tmp_path / "dirty_events"
+    dirty_dir.mkdir()
+    write_event_chunk(str(dirty_dir), "000.json", rows)
+    with open(dirty_dir / "000.json", "a") as f:
+        f.write('{"event_id": 0, "user_id": \n#corrupt-record#\n')
+    q2 = run_offline(spark, str(dirty_dir), str(tmp_path / "dirty"), str(tmp_path / "ck2"))
+    q2.awaitTermination(120)
+    dirty = JsonlIndexer(str(tmp_path / "dirty")).read_index("event_windows")
+
+    malformed = [
+        p.observedMetrics["kse_parse"].malformed_lines for p in q2.recentProgress
+    ]
+    assert sum(malformed) == 2, malformed
+    assert dirty == clean and len(clean) == 2
+
+
+def test_pipeline_sizes_state_stores_to_parallelism(spark, tmp_events_dir, tmp_path):
+    """With the default config the window's state stores number one task
+    wave (defaultParallelism), whatever spark.sql.shuffle.partitions the
+    session carries, and the session value is restored after start."""
+    session_value = spark.conf.get("spark.sql.shuffle.partitions")
+    write_event_chunk(tmp_events_dir, "000.json", [ev(1, "2024-01-01T10:01:00Z")])
+    q = run_offline(spark, tmp_events_dir, str(tmp_path / "index"), str(tmp_path / "ckpt"))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_value == "8"
+    q.awaitTermination(120)
+    data = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(data) == 1
+    assert [op.numStateStoreInstances for op in data[0].stateOperators] == [
+        spark.sparkContext.defaultParallelism
+    ]
+
+
 def test_es_bulk_indexer_payloads(spark, tmp_path):
     # transport runs inside executor Python workers — capture via files
     cap = tmp_path / "bulks"

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from kse.sinks.indexer import JsonlIndexer, write_stream_to_index
 from kse.streaming import windows as W
 from kse.streaming.sources import file_events, kafka_events
-from kse.streaming.pipeline import windowed_docs
+from kse.streaming.pipeline import PipelineConfig, run_offline, windowed_docs
 
 from .conftest import ev, write_event_chunk
 
@@ -54,6 +54,30 @@ def test_checkpoint_restart_recovers_state(spark, tmp_events_dir, tmp_path):
     final = indexer.read_index("win")
     assert final["1704103200000000:click"]["n_events"] == 3
     assert final["1704103200000000:click"]["sum_value"] == 3.0
+
+
+def test_restart_keeps_pinned_state_store_count(spark, tmp_events_dir, tmp_path):
+    """The state-store count is fixed when a checkpoint is created: a query
+    started with 3 stores and resumed with the default config (one store
+    per core) still runs 3, and the window's state carries across."""
+    ckpt = str(tmp_path / "ckpt")
+    index_root = str(tmp_path / "index")
+
+    write_event_chunk(
+        tmp_events_dir, "000.json", [ev(1, "2024-01-01T10:01:00Z"), ev(2, "2024-01-01T10:03:00Z")]
+    )
+    q1 = run_offline(spark, tmp_events_dir, index_root, ckpt, PipelineConfig(shuffle_partitions=3))
+    q1.awaitTermination(120)
+
+    time.sleep(1.1)
+    write_event_chunk(tmp_events_dir, "001.json", [ev(3, "2024-01-01T10:05:00Z")])
+    q2 = run_offline(spark, tmp_events_dir, index_root, ckpt)
+    q2.awaitTermination(120)
+    data = [p for p in q2.recentProgress if p.numInputRows > 0]
+    assert len(data) == 1
+    assert [op.numStateStoreInstances for op in data[0].stateOperators] == [3]
+    final = JsonlIndexer(index_root).read_index("event_windows")
+    assert final["1704103200000000:click"]["n_events"] == 3
 
 
 def test_parquet_sink_round_trip(spark, tmp_events_dir, tmp_path):
