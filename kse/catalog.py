@@ -244,94 +244,6 @@ def prepare_local_layout(spark: SparkSession, sf_dir: str, dest: str) -> float:
     return time.perf_counter() - t0
 
 
-# Partition targets for pinned tables (cache_tables): fixed-size dims
-# collapse to one in-memory partition (their scan + exchange scheduling
-# otherwise costs more than the data), CPU-bound scans (JSON parse, text
-# explode) keep enough splits to use the cores. Local-tier knob only — at
-# cluster scale you pin dims and hot partitions, never whole fact tables,
-# and partition counts come from the layout, not this map.
-_CACHE_PARTS = {
-    "region": 1,
-    "nation": 1,
-    "supplier": 1,
-    "part": 2,
-    "customer": 2,
-    "documents": 2,
-    "embeddings": 1,
-    "orders": 4,
-    "lineitem": 8,
-    "events": 8,
-}
-
-
-def cache_tables(spark: SparkSession, sf_dir: str) -> float:
-    """Pin every NON-BUCKETED table in executor memory (deserialized
-    columnar) and route subsequent :func:`load` calls through the pinned
-    relations; tables the layout bucketed are skipped (see the inline
-    comment below — caching would destroy their co-location).
-
-    This is the warm-buffer-pool posture the DuckDB comparator already
-    enjoys (its warm-up passes leave the parquet pages in the OS cache and
-    its own buffer manager): Spark's equivalent is an explicit ``.cache()``,
-    which also lets Catalyst substitute InMemoryRelation into any plan that
-    scans the same files. Coalescing first cuts per-task scheduling cost
-    (~2-5 ms/task locally) for tables whose data is smaller than the
-    overhead of scanning them in parallel. Bench-only: correctness paths
-    never call this. Returns seconds spent materializing the caches."""
-    import time
-
-    t0 = time.perf_counter()
-    for name in TABLES:
-        if (sf_dir, name) in _LAYOUT_TABLES:
-            # Never cache a table the layout deliberately BUCKETED:
-            # InMemoryRelation does not preserve the bucketed scan's hash
-            # partitioning, so a cached fact side re-Exchanges in every
-            # co-located join — the cache destroys exactly the locality
-            # the layout paid for (measured under bench conditions:
-            # inner_hash ~258 ms cached-broadcast vs ~225 ms
-            # uncached-co-located SHJ; the cached SHJ path is ~370 ms).
-            # The bucketed files sit in the OS page cache after warm-up,
-            # which is the same warm-buffer posture the cache gives the
-            # small dims.
-            continue
-        df = load(spark, sf_dir, name)
-        n = _CACHE_PARTS.get(name)
-        if n is not None and df.rdd.getNumPartitions() > n:
-            df = df.coalesce(n)
-        df = df.cache()
-        df.count()
-        _RELATION_CACHE[(id(spark), sf_dir, name)] = df
-    from kse import registry
-
-    registry.invalidate_plans(sf_dir, spark)
-    return time.perf_counter() - t0
-
-
-def release_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Undo :func:`cache_tables` + :func:`prepare_local_layout` routing for
-    ``sf_dir``: unpersist every pinned relation and point subsequent
-    :func:`load` calls back at the raw driver files.
-
-    The bench's UNCACHED leg uses this to time the same queries against the
-    raw single-file driver layout in the same session (no pinned executor
-    memory, no engine-managed rewrite — only the OS page cache, the same
-    warm-buffer posture the in-process comparator gets). The rewritten
-    layout files themselves stay on disk (the streaming leg reads them by
-    path); only the catalog routing changes."""
-    for key in [k for k in _RELATION_CACHE if k[1] == sf_dir]:
-        df = _RELATION_CACHE.pop(key)
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _LAYOUTS.pop(sf_dir, None)
-    for key in [k for k in _LAYOUT_TABLES if k[0] == sf_dir]:
-        del _LAYOUT_TABLES[key]
-    from kse import registry
-
-    registry.invalidate_plans(sf_dir, spark)
-
-
 def _normalize_session(spark: SparkSession) -> None:
     """Set the runtime confs every query path depends on, once per session.
 

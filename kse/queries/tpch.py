@@ -795,8 +795,9 @@ GROUP BY c_count
         "ms (serializes the reduce). The ~10x ratio vs DuckDB here "
         "measures DuckDB's perfect-hash agg against the JVM constant at "
         "toy volume; the r7->r8 'regression' was the comparator moving "
-        "(DuckDB 71.5 -> 51 ms across rounds, Spark flat), the class the "
-        "SCALE canary gate now pins. Bloom-filter pre-filtering of the "
+        "(DuckDB 71.5 -> 51 ms across rounds, Spark flat), the class "
+        "scale10's same-run interleaved comparator now absorbs. "
+        "Bloom-filter pre-filtering of the "
         "fact side (guide SS3.2, the last untried lever — r10 verdict "
         "item 5) measured and CLOSED in r11 "
         "(`git show 33688ea:tools/q13_bloom_ab.py`, 10x "
@@ -899,8 +900,8 @@ GROUP BY p_brand, p_type, p_size
         "Spark side is FLAT across rounds (390 ms r7, 410-454 ms r9 "
         "fresh measurements; the committed r8 516 ms was ambient) — the "
         "r7->r8 ratio jump 5.45x->8.67x was the DuckDB comparator "
-        "drifting 71.5->51 ms, exactly the class the SCALE canary gate "
-        "now re-measures and flags. Task metrics put the time in real "
+        "drifting 71.5->51 ms, exactly the class scale10's same-run "
+        "interleaved comparator now absorbs. Task metrics put the time in real "
         "work: ~111 ms CPU per task for 187k rows through two broadcast "
         "probes plus the partial distinct (~580 ns/row). Alternatives "
         "measured and rejected (r9): combo-id integer encoding of the "

@@ -101,27 +101,56 @@ class JsonlIndexer:
         return out
 
 
+def check_bulk_response(status: int, body: bytes | str) -> None:
+    """Raise ``IOError`` unless a ``_bulk`` request and every item in it
+    succeeded; the message names the first failed item's ``_id``, status
+    and ``error.type``."""
+    if status >= 300:
+        raise IOError(f"bulk index failed: HTTP {status}")
+    resp = json.loads(body)
+    if not resp.get("errors"):
+        return
+    results = [r for item in resp.get("items", []) for r in item.values()]
+    failed = [r for r in results if r.get("error")]
+    if not failed:
+        raise IOError("bulk index reported errors but no failed item")
+    first, err = failed[0], failed[0]["error"]
+    kind = err.get("type") if isinstance(err, dict) else err
+    raise IOError(
+        f"bulk index: {len(failed)} of {len(results)} items failed; first "
+        f"_id={first.get('_id')} status={first.get('status')} error={kind}"
+    )
+
+
 @dataclass
 class EsBulkIndexer:
     """Elasticsearch REST bulk indexer (production backend).
 
-    ``transport`` is ``(url, payload) -> status`` — ``urllib`` in
-    production, a recording fake in tests. Injected so the bulk-assembly
-    logic is testable without a cluster.
+    ``transport`` is ``(url, payload) -> (status, body)`` with ``body``
+    the raw JSON response — ``urllib`` in production, a recording fake in
+    tests. Injected so the bulk-assembly and response checks are testable
+    without a cluster.
+
+    ``_bulk`` answers HTTP 200 with ``"errors": true`` when single items
+    fail (mapping conflicts, rejected executions), so the status alone
+    would lose those documents without a trace: every response's item
+    results are checked and the first failed item raises (see
+    :func:`check_bulk_response`). Spark then fails the micro-batch, and the
+    ``_id`` upserts make its replay idempotent.
     """
 
     base_url: str
     bulk_size: int = 1000
-    transport: Callable[[str, bytes], int] | None = None
+    transport: Callable[[str, bytes], tuple[int, bytes]] | None = None
 
-    def _default_transport(self, url: str, payload: bytes) -> int:
+    def _default_transport(self, url: str, payload: bytes) -> tuple[int, bytes]:
         import urllib.request
 
         req = urllib.request.Request(
             url, data=payload, headers={"Content-Type": "application/x-ndjson"}
         )
         with urllib.request.urlopen(req) as resp:  # pragma: no cover (no ES here)
-            return resp.status
+            return resp.status, resp.read()
 
     def foreach_batch(self, index: str, id_col: str) -> Callable[[DataFrame, int], None]:
         base_url, bulk_size = self.base_url, self.bulk_size
@@ -134,9 +163,7 @@ class EsBulkIndexer:
                 def flush():
                     if buf:
                         payload = ("\n".join(buf) + "\n").encode()
-                        status = transport(f"{base_url}/_bulk", payload)
-                        if status >= 300:
-                            raise IOError(f"bulk index failed: HTTP {status}")
+                        check_bulk_response(*transport(f"{base_url}/_bulk", payload))
                         buf.clear()
 
                 for doc_id, doc in _rows_to_actions(rows, id_col):

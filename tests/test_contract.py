@@ -374,374 +374,70 @@ def test_no_recompute_diamond_regression(spark):
         registry.invalidate_plans(spark=spark)
 
 
-def test_scale_canary_drift_logic(tmp_path):
-    """The SCALE comparator canary (tools/scale10.canary_check): in-band
-    readings pass untouched, a transient spike is healed by the injected
-    re-measure, and persistent drift is flagged by name with ok=False —
-    pure-python, no Spark/DuckDB needed."""
+def test_scale_interleave_alternates_engines():
+    """tools/scale10.interleave runs Spark and DuckDB turn about within one
+    query's window, so ambient load lands on both columns alike, and
+    returns one raw sample per run for each engine — Spark-free."""
+    from tools.scale10 import interleave
+
+    calls: list[str] = []
+    spark_s, duck_s = interleave(
+        lambda: calls.append("spark"), lambda: calls.append("duckdb"), 3
+    )
+    assert calls == ["spark", "duckdb"] * 3
+    assert len(spark_s) == len(duck_s) == 3
+    assert all(v >= 0 for v in spark_s + duck_s)
+
+    # no oracle (or --spark-only): Spark alone, empty DuckDB list
+    calls.clear()
+    spark_s, duck_s = interleave(lambda: calls.append("spark"), None, 2)
+    assert calls == ["spark", "spark"] and len(spark_s) == 2 and duck_s == []
+
+
+def test_scale_row_keeps_raw_samples_and_best_of():
+    """A SCALE artifact row carries both raw sample lists; its best-of
+    columns and ratio are computed from exactly those lists."""
+    from tools.scale10 import scale_row
+
+    row = scale_row([0.90, 0.70, 0.80], [0.12, 0.10, 0.11])
+    assert row["spark_samples"] == [0.90, 0.70, 0.80]
+    assert row["duckdb_samples"] == [0.12, 0.10, 0.11]
+    assert row["spark"] == 0.70 and row["duckdb"] == 0.10
+    assert row["ratio"] == 7.0
+
+    row = scale_row([1.5], [])
+    assert row["spark"] == 1.5 and row["duckdb"] is None and row["ratio"] is None
+    assert row["duckdb_samples"] == []
+
+
+def test_battery_bench_verdict():
+    """battery's bench gate passes a clean JSON line under 2x BASELINE.md
+    and fails a line that carries errors or a headline that did not run
+    (value -1.0) — a check that did not run never reads as ok."""
     import json
 
-    from tools.scale10 import canary_check, trailing_medians
+    from tools.battery import _bench_verdict
 
-    # trailing_medians reads only same-tier artifacts and medians per query
-    for i, (mult, dt) in enumerate([(10, 0.040), (10, 0.044), (100, 9.9)]):
-        (tmp_path / f"SCALE_r0{i}.json").write_text(
-            json.dumps({"rows_mult": mult, "queries": {"q": {"duckdb": dt}}})
-        )
-    meds = trailing_medians(str(tmp_path), 10)
-    assert set(meds) == {"q"} and abs(meds["q"] - 0.042) < 1e-12
-
-    # in-band: no re-measure call, no flag
-    calls = []
-    duck = {"q": 0.050}
-    res = canary_check(duck, meds, lambda n: calls.append(n) or 99.0)
-    assert res["ok"] and not res["flagged"] and not calls and duck["q"] == 0.050
-
-    # transient spike: re-measured back in band, healed, still ok
-    duck = {"q": 0.120}
-    res = canary_check(duck, meds, lambda n: 0.041)
-    assert res["ok"] and not res["flagged"] and duck["q"] == 0.041
-
-    # transient too-fast glitch: a confirmed-normal re-measure heals it
-    # (direction-aware keep — the old min() could never heal down-drift,
-    # the r10 advisor's medium finding)
-    duck = {"q": 0.010}
-    res = canary_check(duck, meds, lambda n: 0.041)
-    assert res["ok"] and not res["flagged"] and duck["q"] == 0.041
-
-    # persistent drift (both directions): flagged by name, ok=False,
-    # and the direction-appropriate reading is kept (up: best, down:
-    # worst — both still out of band here)
-    duck = {"q": 0.120}
-    res = canary_check(duck, meds, lambda n: 0.130)
-    assert not res["ok"] and "q" in res["flagged"] and duck["q"] == 0.120
-    duck = {"q": 0.010}
-    res = canary_check(duck, meds, lambda n: 0.011)
-    assert not res["ok"] and res["flagged"]["q"]["drift"] > 1.5
-    assert duck["q"] == 0.011  # worst-of kept for down-drift
-
-    # engine column (flag_down=False): downward drift is a plan
-    # improvement — recorded informationally, never re-measured, never
-    # fails the canary; upward drift still flags exactly as above
-    calls = []
-    sp = {"q": 0.010}
-    res = canary_check(sp, meds, lambda n: calls.append(n) or 0.011, flag_down=False, label="spark")
-    assert res["ok"] and not res["flagged"] and not calls and sp["q"] == 0.010
-    assert res["improved"]["q"]["spark"] == 0.010
-    sp = {"q": 0.120}
-    res = canary_check(sp, meds, lambda n: 0.130, flag_down=False, label="spark")
-    assert not res["ok"] and res["flagged"]["q"]["spark"] == 0.120
-
-    # absolute noise floor: a dispatch-floor reading 1.6x off a tiny
-    # median (6 ms apart) is timer jitter, not drift — in-band with no
-    # re-measure; the same ratio past the floor still flags
-    calls = []
-    duck = {"q": 0.048}  # 6 ms from the 0.042 median, ratio > 1.1
-    res = canary_check(
-        duck, meds, lambda n: calls.append(n) or 9.9, threshold=1.1
-    )
-    assert res["ok"] and not res["flagged"] and not calls
-    duck = {"q": 0.090}  # 48 ms from the median: past the floor, flags
-    res = canary_check(duck, meds, lambda n: 0.091, threshold=1.1)
-    assert not res["ok"] and "q" in res["flagged"]
+    clean = {"value": 1.5, "baseline_md_total": 1.0297}
+    assert _bench_verdict("noise\n" + json.dumps(clean))[0] == "PASS"
+    slow = dict(clean, value=2.5)
+    assert _bench_verdict(json.dumps(slow))[0] == "FAIL"
+    errored = dict(clean, errors={"duckdb": "IOException: boom"})
+    verdict, tail = _bench_verdict(json.dumps(errored))
+    assert verdict == "FAIL" and "duckdb" in tail
+    missing = dict(clean, value=-1.0)
+    assert _bench_verdict(json.dumps(missing))[0] == "FAIL"
+    assert _bench_verdict("no json here")[0] == "FAIL"
 
 
-def test_scale_canary_band_drift(tmp_path):
-    """r10: drift is measured from the trailing BAND edges (min/max of
-    committed readings), not the median — five full 10x runs on one
-    quiet box each flagged a DIFFERENT sub-second query whose reading
-    sat inside the committed historical range (run 4 flagged a
-    q_graph_triangles reading faster than r9's committed value). A
-    reading inside [min/threshold, max*threshold] passes without a
-    re-measure; the r8 balloon class (2-10x above every neighbour) still
-    flags."""
-    import json
+def test_bench_headline_total_is_negative_when_a_query_failed():
+    """bench.py's ``value``: a headline query without a timing makes the
+    total -1.0 instead of a smaller partial sum that reads as faster."""
+    from bench import HEADLINE, headline_total
 
-    from tools.scale10 import canary_check, trailing_bands, trailing_medians
-
-    # committed history legitimately spans ~2.5x: 0.32 / 0.53 / 0.81
-    for i, dt in enumerate([0.32, 0.53, 0.81]):
-        (tmp_path / f"SCALE_r0{i}.json").write_text(
-            json.dumps({"rows_mult": 10, "queries": {"q": {"duckdb": dt}}})
-        )
-    meds = trailing_medians(str(tmp_path), 10)
-    bands = trailing_bands(str(tmp_path), 10)
-    assert bands["q"] == (0.32, 0.81) and meds["q"] == 0.53
-
-    # 1.35x the MEDIAN but inside the band: passes untouched, no re-measure
-    calls = []
-    duck = {"q": 0.715}
-    res = canary_check(duck, meds, lambda n: calls.append(n) or 9.9, bands=bands)
-    assert res["ok"] and not res["flagged"] and not calls and duck["q"] == 0.715
-
-    # just past the band edge but within threshold x max: still in-band
-    duck = {"q": 1.10}  # 1.36x the 0.81 max, 2.08x the median
-    res = canary_check(duck, meds, lambda n: calls.append(n) or 9.9, bands=bands)
-    assert res["ok"] and not res["flagged"] and not calls
-
-    # the r8 balloon class: far above threshold x max — re-measured, and
-    # persistent drift still flags with the band recorded
-    duck = {"q": 2.60}
-    res = canary_check(duck, meds, lambda n: 2.50, bands=bands)
-    assert not res["ok"] and res["flagged"]["q"]["trailing_band"] == [0.32, 0.81]
-    assert duck["q"] == 2.50  # best-of kept for up-drift
-
-    # downward: above min/threshold passes; a persistent too-fast glitch
-    # below it still flags (comparator column, flag_down=True)
-    duck = {"q": 0.25}  # 0.78x of the 0.32 min: inside the band gate
-    res = canary_check(duck, meds, lambda n: calls.append(n) or 9.9, bands=bands)
-    assert res["ok"] and not res["flagged"] and not calls
-    duck = {"q": 0.10}
-    res = canary_check(duck, meds, lambda n: 0.11, bands=bands)
-    assert not res["ok"] and res["flagged"]["q"]["drift"] > 1.5
-
-    # engine column: a reading below the band is an improvement, recorded
-    # informationally only
-    sp = {"q": 0.10}
-    res = canary_check(sp, meds, lambda n: calls.append(n) or 9.9,
-                       flag_down=False, label="spark", bands=bands)
-    assert res["ok"] and not res["flagged"] and not calls
-    assert res["improved"]["q"]["spark"] == 0.10
-
-    # bands=None collapses to the median-anchored legacy behavior
-    duck = {"q": 0.715}  # 1.35x median: in-band only WITH the band
-    res = canary_check(duck, meds, lambda n: 0.716)
-    assert res["ok"]  # 1.35 < 1.5 threshold either way
-    duck = {"q": 1.10}
-    res = canary_check(duck, meds, lambda n: 1.10)
-    assert not res["ok"]  # 2.08x the median with no band: flags
-
-
-def test_scale_canary_ok_skips_canaries_that_did_not_run():
-    """canary_ok combines only the canaries that ran: a skipped canary
-    records ok=None and must never read as passed."""
-    from tools.scale10 import canaries_ok
-
-    assert canaries_ok(None, None) is None
-    assert canaries_ok(None, True) is True
-    assert canaries_ok(False, None) is False
-    assert canaries_ok(True, True) is True
-    assert canaries_ok(True, False) is False
-
-
-def test_trailing_medians_excludes_invalid_comparator_columns(tmp_path):
-    """An invalidated comparator column must never feed the trailing
-    reference (the first r9 run's 12 phantom flags were r8's ballooned
-    column dragging the median up): by-name exclusions and artifacts
-    self-marked canary_ok=false are both skipped."""
-    import json
-
-    from tools.scale10 import trailing_medians
-
-    # three same-tier artifacts: clean, by-name-excluded, self-invalidated
-    (tmp_path / "SCALE_r07.json").write_text(
-        json.dumps(
-            {"rows_mult": 10, "queries": {"q": {"duckdb": 0.040, "spark": 0.1}}}
-        )
-    )
-    (tmp_path / "SCALE_r08.json").write_text(  # duckdb column in EXCLUDED_COLUMNS
-        json.dumps(
-            {"rows_mult": 10, "queries": {"q": {"duckdb": 9.0, "spark": 0.3}}}
-        )
-    )
-    (tmp_path / "SCALE_r09.json").write_text(
-        json.dumps(
-            {
-                "rows_mult": 10,
-                "canary_ok": False,  # legacy whole-artifact flag
-                "queries": {"q": {"duckdb": 7.0, "spark": 8.0}},
-            }
-        )
-    )
-    meds = trailing_medians(str(tmp_path), 10)
-    assert abs(meds["q"] - 0.040) < 1e-12, meds
-
-    # per-column: the by-name exclusion names only r08's DUCKDB column, so
-    # its spark reading still counts; r09's legacy canary_ok=False only
-    # condemns its duckdb column (the flag predates the spark canary)
-    smeds = trailing_medians(str(tmp_path), 10, "spark")
-    assert abs(smeds["q"] - 0.3) < 1e-12, smeds  # median of 0.1, 0.3, 8.0
-
-    # a per-column canary dict overrides the legacy flag: duckdb ok,
-    # spark failed
-    (tmp_path / "SCALE_r10.json").write_text(
-        json.dumps(
-            {
-                "rows_mult": 10,
-                "canary_ok": False,
-                "canary": {"ok": True},
-                "canary_spark": {"ok": False},
-                "queries": {"q": {"duckdb": 0.044, "spark": 9.9}},
-            }
-        )
-    )
-    meds = trailing_medians(str(tmp_path), 10)
-    assert abs(meds["q"] - 0.042) < 1e-12, meds  # median of 0.040, 0.044
-    smeds = trailing_medians(str(tmp_path), 10, "spark")
-    assert abs(smeds["q"] - 0.3) < 1e-12, smeds  # r10 spark excluded
-
-    # per-QUERY invalidation (r10 advisor): a failed canary that NAMES
-    # its suspect rows condemns only those — the un-flagged readings of
-    # the same column still feed the reference instead of draining the
-    # pool to a single round
-    (tmp_path / "SCALE_r11.json").write_text(
-        json.dumps(
-            {
-                "rows_mult": 10,
-                "canary_ok": False,
-                "canary": {"ok": False, "flagged": {"q": {"drift": 3.0}}},
-                "canary_spark": {"ok": True},
-                "queries": {
-                    "q": {"duckdb": 5.0, "spark": 0.2},
-                    "q2": {"duckdb": 0.060, "spark": 0.5},
-                },
-            }
-        )
-    )
-    meds = trailing_medians(str(tmp_path), 10)
-    assert abs(meds["q"] - 0.042) < 1e-12, meds  # r11's flagged q excluded
-    assert abs(meds["q2"] - 0.060) < 1e-12, meds  # r11's clean q2 counts
-    smeds = trailing_medians(str(tmp_path), 10, "spark")
-    assert abs(smeds["q"] - 0.25) < 1e-12, smeds  # r11 spark clean: 0.1,0.2,0.3,8.0
-
-
-def test_trailing_medians_direction_aware_flag_inclusion(tmp_path):
-    """Direction-aware inclusion (r10): an UPWARD-flagged comparator row
-    still feeds the reference (its value is a min-of-4 that load can only
-    inflate; permanent exclusion drained q_llm_dedup_simhash_scaled's
-    reference to one pre-shift round while three consecutive rounds read
-    the durable post-shift value). A DOWNWARD-flagged comparator row (the
-    timer-glitch class) and every flagged SPARK row stay excluded."""
-    import json
-
-    from tools.scale10 import trailing_medians
-
-    (tmp_path / "SCALE_r07.json").write_text(
-        json.dumps(
-            {"rows_mult": 10, "queries": {"up": {"duckdb": 5.0, "spark": 1.0},
-                                          "down": {"duckdb": 0.20, "spark": 2.0}}}
-        )
-    )
-    (tmp_path / "SCALE_r09.json").write_text(
-        json.dumps(
-            {
-                "rows_mult": 10,
-                "canary_ok": False,
-                "canary": {
-                    "ok": False,
-                    "flagged": {
-                        # durable shift: recorded ABOVE its then-median -> keep
-                        "up": {"duckdb": 9.0, "trailing_median": 5.0, "drift": 1.8},
-                        # glitch: recorded BELOW its then-median -> exclude
-                        "down": {"duckdb": 0.05, "trailing_median": 0.20, "drift": 4.0},
-                    },
-                },
-                "canary_spark": {
-                    "ok": False,
-                    # spark flags are upward-persistent load: always excluded
-                    "flagged": {"up": {"spark": 9.9, "trailing_median": 1.0}},
-                },
-                "queries": {"up": {"duckdb": 9.0, "spark": 9.9},
-                            "down": {"duckdb": 0.05, "spark": 2.2}},
-            }
-        )
-    )
-    meds = trailing_medians(str(tmp_path), 10)
-    assert abs(meds["up"] - 7.0) < 1e-12, meds  # median of 5.0 and kept 9.0
-    assert abs(meds["down"] - 0.20) < 1e-12, meds  # glitch 0.05 excluded
-    smeds = trailing_medians(str(tmp_path), 10, "spark")
-    assert abs(smeds["up"] - 1.0) < 1e-12, smeds  # flagged spark 9.9 excluded
-    assert abs(smeds["down"] - 2.1) < 1e-12, smeds  # unflagged spark rows count
-
-
-def test_trailing_band_excludes_single_upward_flags(tmp_path):
-    """r11 (advisor): an upward-flagged comparator reading feeds the
-    MEDIAN (the r10 pool-drain rule) but NOT the band — one
-    load-ballooned round must not raise the band's silent-pass ceiling
-    for every later round."""
-    import json
-
-    from tools.scale10 import trailing_bands, trailing_medians
-
-    # r17+ names: SCALE_r08's duckdb column is excluded by name in
-    # EXCLUDED_COLUMNS, so synthetic artifacts must avoid the real names
-    (tmp_path / "SCALE_r17.json").write_text(
-        json.dumps({"rows_mult": 10, "queries": {"q": {"duckdb": 0.050}}})
-    )
-    (tmp_path / "SCALE_r18.json").write_text(
-        json.dumps({"rows_mult": 10, "queries": {"q": {"duckdb": 0.055}}})
-    )
-    (tmp_path / "SCALE_r19.json").write_text(
-        json.dumps(
-            {
-                "rows_mult": 10,
-                "canary_ok": False,
-                "canary": {
-                    "ok": False,
-                    "flagged": {
-                        "q": {"duckdb": 0.083, "trailing_median": 0.052, "drift": 1.51}
-                    },
-                },
-                "canary_spark": {"ok": True},
-                "queries": {"q": {"duckdb": 0.083, "spark": 0.1}},
-            }
-        )
-    )
-    meds = trailing_medians(str(tmp_path), 10)
-    assert abs(meds["q"] - 0.055) < 1e-12, meds  # median of 0.050/0.055/0.083
-    bands = trailing_bands(str(tmp_path), 10)
-    assert bands["q"] == (0.050, 0.055), bands  # 0.083 NOT admitted to the band
-
-
-def test_trailing_flags_heal_after_consecutive_rounds(tmp_path):
-    """r11 (advisor): a query upward-flagged in >= 2 CONSECUTIVE committed
-    artifacts is a durable shift (the r9+r10 q_llm_dedup_semantic_arrow
-    engine-host shift), not load — those readings join the reference
-    (median AND band) for both columns, so the shift stops re-flagging
-    forever. A single flagged round still stays out of the band."""
-    import json
-
-    from tools.scale10 import trailing_bands, trailing_medians
-
-    (tmp_path / "SCALE_r18.json").write_text(
-        json.dumps({"rows_mult": 10, "queries": {"q": {"spark": 2.8, "duckdb": 1.0}}})
-    )
-    for rnd, val in (("19", 5.8), ("20", 5.5)):
-        (tmp_path / f"SCALE_r{rnd}.json").write_text(
-            json.dumps(
-                {
-                    "rows_mult": 10,
-                    "canary_ok": False,
-                    "canary": {"ok": True},
-                    "canary_spark": {
-                        "ok": False,
-                        "flagged": {
-                            "q": {"spark": val, "trailing_median": 2.8, "drift": 2.0}
-                        },
-                    },
-                    "queries": {"q": {"spark": val, "duckdb": 1.0}},
-                }
-            )
-        )
-    smeds = trailing_medians(str(tmp_path), 10, "spark")
-    assert abs(smeds["q"] - 5.5) < 1e-12, smeds  # median of 2.8/5.8/5.5: healed
-    sbands = trailing_bands(str(tmp_path), 10, "spark")
-    assert sbands["q"] == (2.8, 5.8), sbands  # healed readings widen the band
-
-
-def test_trailing_band_windows_to_last_k_artifacts(tmp_path):
-    """r11 (advisor): the band is the (min, max) of the last 4 included
-    artifacts only — an all-time band can only widen monotonically. The
-    median still reads the full history."""
-    import json
-
-    from tools.scale10 import trailing_bands, trailing_medians
-
-    for i, dt in enumerate([9.0, 0.050, 0.055, 0.052, 0.058]):
-        (tmp_path / f"SCALE_r0{i}.json").write_text(
-            json.dumps({"rows_mult": 10, "queries": {"q": {"duckdb": dt}}})
-        )
-    bands = trailing_bands(str(tmp_path), 10)
-    assert bands["q"] == (0.050, 0.058), bands  # the old 9.0 aged out
-    meds = trailing_medians(str(tmp_path), 10)
-    assert abs(meds["q"] - 0.055) < 1e-12, meds  # median keeps full history
+    timings = {name: 0.25 for name in HEADLINE}
+    assert headline_total(timings) == 2.0
+    timings[HEADLINE[0]] = -1.0
+    assert headline_total(timings) == -1.0
+    del timings[HEADLINE[0]]
+    assert headline_total(timings) == -1.0

@@ -339,7 +339,7 @@ def test_es_bulk_indexer_payloads(spark, tmp_path):
 
         with open(_os.path.join(_dir, _uuid.uuid4().hex), "wb") as f:
             f.write(payload)
-        return 200
+        return 200, b'{"errors": false, "items": []}'
 
     idx = EsBulkIndexer("http://es:9200", bulk_size=2, transport=transport)
     df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "doc_id long, body string")
@@ -349,6 +349,36 @@ def test_es_bulk_indexer_payloads(spark, tmp_path):
     metas = [a for a in actions if "index" in a]
     assert {m["index"]["_id"] for m in metas} == {"1", "2", "3"}
     assert all(m["index"]["_index"] == "docs" for m in metas)
+
+
+def test_es_bulk_indexer_raises_on_partial_item_failure(spark):
+    """ES _bulk answers HTTP 200 with "errors": true when single items
+    fail; the indexer must raise naming the failed item instead of
+    dropping that document silently."""
+
+    def transport(url, payload):
+        import json as _json
+
+        lines = payload.decode().splitlines()
+        items = []
+        for meta in lines[::2]:
+            doc_id = _json.loads(meta)["index"]["_id"]
+            result = {"_index": "docs", "_id": doc_id, "status": 201}
+            if doc_id == "2":
+                result["status"] = 400
+                result["error"] = {"type": "mapper_parsing_exception", "reason": "bad body"}
+            items.append({"index": result})
+        return 200, _json.dumps({"errors": True, "items": items}).encode()
+
+    idx = EsBulkIndexer("http://es:9200", transport=transport)
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "doc_id long, body string"
+    ).coalesce(1)
+    with pytest.raises(Exception) as exc:
+        write_batch_to_index(df, idx, index="docs", id_col="doc_id")
+    msg = str(exc.value)
+    assert "1 of 3 items failed" in msg
+    assert "_id=2 status=400 error=mapper_parsing_exception" in msg
 
 
 def test_rate_source_schema(spark):

@@ -101,7 +101,10 @@ def main() -> int:
 
 
 def _bench_verdict(out: str) -> tuple[str, str]:
-    """PASS iff the JSON line parses and headline <= 2x BASELINE.md's total."""
+    """PASS iff the JSON line parses, carries no ``errors``, has a positive
+    headline total, and that total is <= 2x BASELINE.md's total. A bench
+    whose headline did not run (``value`` -1.0) or that recorded a failed
+    leg reads FAIL: a check that did not run never reports ok."""
     for line in reversed(out.strip().splitlines()):
         if line.startswith("{"):
             try:
@@ -112,6 +115,10 @@ def _bench_verdict(out: str) -> tuple[str, str]:
             val = d.get("value")
             if not (base and val):
                 return "FAIL", "bench JSON missing value/baseline"
+            if d.get("errors"):
+                return "FAIL", f"bench errors: {sorted(d['errors'])}"
+            if val <= 0:
+                return "FAIL", f"bench headline did not run (value {val})"
             ratio = val / base
             summary = (
                 f"total {val:.3f}s = {ratio:.2f}x baseline; "
