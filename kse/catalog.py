@@ -189,37 +189,12 @@ def prepare_local_layout(spark: SparkSession, sf_dir: str, dest: str) -> float:
     driver files are untouched unless they opt in.
     """
     import time
+    from concurrent.futures import ThreadPoolExecutor
 
     t0 = time.perf_counter()
     if _LAYOUTS.get(sf_dir) != dest:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.sql import functions as F
-
         def write_one(name: str) -> None:
             df = load(spark, sf_dir, name)
-            key = _LAYOUT_BUCKETS.get(name)
-            if key is not None:
-                # repartition on the bucket key first so each write task
-                # holds exactly one bucket -> one file per bucket, which is
-                # what lets the scan report its sort order downstream
-                # stable digest, not hash() (randomized per process) — the
-                # catalog table name is deterministic across runs
-                import hashlib
-
-                tag = hashlib.md5(f"{sf_dir}|{dest}".encode()).hexdigest()[:8]
-                tbl = f"kse_b_{name}_{tag}"
-                (
-                    df.repartition(_N_BUCKETS, F.col(key))
-                    .write.mode("overwrite")
-                    .format("parquet")
-                    .option("path", os.path.join(dest, f"{name}_bucketed"))
-                    .bucketBy(_N_BUCKETS, key)
-                    .sortBy(key)
-                    .saveAsTable(tbl)
-                )
-                _LAYOUT_TABLES[(sf_dir, name)] = tbl
-                return
             n_rows = df.count()
             n = max(1, min(16, n_rows // 37_500))
             n = max(n, _LAYOUT_FLOOR.get(name, 1))
@@ -231,17 +206,56 @@ def prepare_local_layout(spark: SparkSession, sf_dir: str, dest: str) -> float:
         # driver threads overlaps their scheduling + IO (Spark is thread-
         # safe for concurrent actions on one session). Ingest at cluster
         # scale is the same shape: many tables landing concurrently.
-        with ThreadPoolExecutor(max_workers=len(TABLES)) as pool:
-            list(pool.map(write_one, TABLES))
-        _LAYOUTS[sf_dir] = dest
-        # drop raw-file relations and prepared plans built over them so the
-        # next build re-resolves against the layout
-        for key in [k for k in _RELATION_CACHE if k[1] == sf_dir]:
-            del _RELATION_CACHE[key]
-        from kse import registry
-
-        registry.invalidate_plans(sf_dir, spark)
+        plain = [n for n in TABLES if n not in _LAYOUT_BUCKETS]
+        with ThreadPoolExecutor(max_workers=len(plain)) as pool:
+            list(pool.map(write_one, plain))
+        adopt_layout(spark, sf_dir, dest)
     return time.perf_counter() - t0
+
+
+def adopt_layout(spark: SparkSession, sf_dir: str, dest: str) -> None:
+    """Land ``sf_dir``'s ``_LAYOUT_BUCKETS`` fact tables under ``dest`` as
+    catalog tables bucketed and sorted on their join key, then route every
+    :func:`load` of ``sf_dir`` through ``dest``: bucketed tables for the
+    fact tables, ``dest/<name>.parquet`` for the rest (which the caller has
+    already written there, or which ``dest == sf_dir`` already holds)."""
+    import hashlib
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import functions as F
+
+    # stable digest, not hash() (randomized per process) — the catalog
+    # table name is deterministic across runs
+    tag = hashlib.md5(f"{sf_dir}|{dest}".encode()).hexdigest()[:8]
+
+    def bucket_one(name: str) -> None:
+        key = _LAYOUT_BUCKETS[name]
+        tbl = f"kse_b_{name}_{tag}"
+        # repartition on the bucket key first so each write task holds
+        # exactly one bucket -> one file per bucket, which is what lets
+        # the scan report its sort order downstream
+        (
+            load(spark, sf_dir, name)
+            .repartition(_N_BUCKETS, F.col(key))
+            .write.mode("overwrite")
+            .format("parquet")
+            .option("path", os.path.join(dest, f"{name}_bucketed"))
+            .bucketBy(_N_BUCKETS, key)
+            .sortBy(key)
+            .saveAsTable(tbl)
+        )
+        _LAYOUT_TABLES[(sf_dir, name)] = tbl
+
+    with ThreadPoolExecutor(max_workers=len(_LAYOUT_BUCKETS)) as pool:
+        list(pool.map(bucket_one, _LAYOUT_BUCKETS))
+    _LAYOUTS[sf_dir] = dest
+    # drop raw-file relations and prepared plans built over them so the
+    # next build re-resolves against the layout
+    for key in [k for k in _RELATION_CACHE if k[1] == sf_dir]:
+        del _RELATION_CACHE[key]
+    from kse import registry
+
+    registry.invalidate_plans(sf_dir, spark)
 
 
 def _normalize_session(spark: SparkSession) -> None:

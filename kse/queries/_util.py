@@ -16,6 +16,8 @@ Oracle-parity rules used across all modules (SURVEY.md §7.6):
 
 from __future__ import annotations
 
+from typing import Any, Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,6 +57,7 @@ MID_SAFE_SQL = "BETWEEN -9000000000000.0 AND 9000000000000.0"
 _WIDE_SAFE = 9.0e15
 WIDE_SAFE_SQL = "BETWEEN -9000000000000000.0 AND 9000000000000000.0"
 _TWO53 = 9007199254740992  # 2^53 — the decimal->double split quantum
+_DEC = "decimal(38,0)"
 
 
 def micro_exact(c: Column) -> Column:
@@ -103,32 +106,113 @@ def dsum(c: Column, alias: str) -> Column:
       comparable >9e15 values — documented out-of-domain (report DECIMAL
       inputs if you genuinely sum astronomic doubles).
 
-    Oracle twin: ``dsum_sql()`` below.
+    The device is two pieces, each with a SQL-text twin, and this module
+    is the only place that knows the bands: ``bands``/``bands_sql`` split
+    a row into five channels, ``band_total``/``band_total_sql`` combine
+    the aggregated channels into the final double (``band_decimal`` /
+    ``band_decimal_sql`` into the exact DECIMAL(38,0) total instead).
+    Every form is a caller's choice of aggregate over the channels:
+
+    - plain: ``dsum``/``dsum_expr`` — ``dsum_sql(x)``;
+    - window frame: each ``agg_bands`` aggregate ``.over(w)`` —
+      ``dsum_sql(x, over="w")`` (q_win_sliding_frame);
+    - DISTINCT: ``agg_bands(b, F.sum_distinct)`` —
+      ``dsum_sql(x, distinct=True)`` (q_agg_distinct);
+    - FILTER / pivot cell: ``dsum_expr`` under ``pivot`` —
+      ``dsum_sql(x, filter_sql)`` (q_agg_pivot);
+    - salted two-stage: ``agg_bands`` per (key, salt), ``F.sum`` of each
+      partial channel per key, then ``band_total`` — ``dsum_sql(x)``
+      (q_agg_skew_salted);
+    - unit-scale truncating: ``bands(c, unit=True)`` and
+      ``band_total(s, scale=1.0)`` (q_tpch_q1's sum_qty);
+    - DECIMAL-accumulating hot band: ``agg_bands(b, exact=True)`` and
+      ``band_total(s, exact=True)`` — exact past 2^63 micro units
+      (q_agg_groupby_wide);
+    - DECIMAL total: ``band_decimal(agg_bands(b, exact=True))``, the
+      exact total with out-of-domain rows left out (q_agg_pareto's rank
+      key).
     """
     return dsum_expr(c).alias(alias)
 
 
-def out_of_domain(c: Column) -> Column:
-    """True when x forces the whole group onto the plain IEEE sum path:
-    NaN, ±Inf (both fail BETWEEN on either engine), or absorption-band
-    magnitude (|x| > 9e15)."""
-    return ~c.between(-_WIDE_SAFE, _WIDE_SAFE)
+class Bands(NamedTuple):
+    """The device's five channels (see ``dsum``): per row from ``bands``
+    / ``bands_sql``, or aggregated by the caller. Columns on the
+    DataFrame side, SQL text on the oracle side."""
+
+    hot: Any  # hot-band units (BIGINT); NULL outside |x| <= 9e9
+    wide: Any  # wide-band micro units (DECIMAL(38,0)); NULL outside it
+    plain: Any  # x itself: the IEEE channel for out-of-domain groups
+    bad: Any  # 1 for NaN, ±Inf or |x| > 9e15, else NULL (counted)
+    nwide: Any  # 1 for finite 9e9 < |x| <= 9e15, else NULL (counted)
 
 
-def in_wide_band(c: Column) -> Column:
-    """True for finite 9e9 < |x| <= 9e15 — the DECIMAL(38,0) band."""
-    return c.between(-_WIDE_SAFE, _WIDE_SAFE) & ~micro_exact(c)
+def bands(c: Column, unit: bool = False) -> Bands:
+    """Per-row channels of ``c``. The quantiser is the rounded micro unit
+    ``floor(x*1e6+0.5)``, or with ``unit`` the truncated unit ``floor(x)``
+    (whose wide band fits BIGINT per value, so it needs no mid split)."""
+    in_domain = c.between(-_WIDE_SAFE, _WIDE_SAFE)
+    in_wide = in_domain & ~micro_exact(c)
+    if unit:
+        hot = F.floor(c)
+        wide = F.when(in_wide, F.floor(c).cast(_DEC))
+    else:
+        hot = F.floor(c * 1000000.0 + 0.5)
+        in_mid = c.between(-_MID_SAFE, _MID_SAFE) & ~micro_exact(c)
+        in_unit = in_domain & ~c.between(-_MID_SAFE, _MID_SAFE)
+        wide = F.when(in_mid, F.floor(c * 1000000.0 + 0.5).cast(_DEC)).when(
+            in_unit, F.floor(c + 0.5).cast(_DEC) * 1000000
+        )
+    return Bands(
+        F.when(micro_exact(c), hot),
+        wide,
+        c,
+        F.when(~in_domain, F.lit(1)),
+        F.when(in_wide, F.lit(1)),
+    )
 
 
-def wide_micro(c: Column) -> Column:
-    """Per-row wide-band micro units as DECIMAL(38,0) (NULL outside the
-    band): ``floor(x*1e6+0.5)`` while that stays inside BIGINT
-    (|x| <= 9e12), unit-scale ``floor(x+0.5)*1e6`` above it (micro
-    precision is already below one double ulp there)."""
-    in_mid = c.between(-_MID_SAFE, _MID_SAFE) & ~micro_exact(c)
-    in_unit = c.between(-_WIDE_SAFE, _WIDE_SAFE) & ~c.between(-_MID_SAFE, _MID_SAFE)
-    return F.when(in_mid, F.floor(c * 1000000.0 + 0.5).cast("decimal(38,0)")).when(
-        in_unit, F.floor(c + 0.5).cast("decimal(38,0)") * 1000000
+def agg_bands(
+    b: Bands, total: Callable[[Column], Column] = F.sum, exact: bool = False
+) -> Bands:
+    """Group aggregates of per-row channels: ``total`` (``F.sum``,
+    ``F.sum_distinct``) over the three value channels, a plain count over
+    the two flags. ``exact`` accumulates the hot band in DECIMAL(38,0)."""
+    hot = b.hot.cast(_DEC) if exact else b.hot
+    return Bands(
+        total(hot), total(b.wide), total(b.plain), F.count(b.bad), F.count(b.nwide)
+    )
+
+
+def band_total(s: Bands, scale: float = 1000000.0, exact: bool = False) -> Column:
+    """Aggregated channels -> the final double: the plain IEEE sum when
+    the group holds an out-of-domain value, the exact hot+wide DECIMAL
+    total through the 2^53 split when it holds a wide-band value, else
+    the hot sum divided by ``scale`` (1e6 for micro units, 1.0 for unit
+    scale). ``exact``: ``s.hot`` is a DECIMAL sum, which also converts
+    through the split."""
+    if exact:
+        hot = dec_to_double(s.hot, scale)
+    elif scale != 1.0:
+        hot = s.hot / scale
+    else:
+        hot = s.hot.cast("double")
+    total = F.coalesce(s.hot.cast(_DEC), F.lit(0).cast(_DEC)) + s.wide
+    return (
+        F.when(s.bad > 0, s.plain)
+        .when(s.nwide > 0, dec_to_double(total, scale))
+        .otherwise(hot)
+    )
+
+
+def band_decimal(s: Bands) -> Column:
+    """Aggregated channels -> the exact DECIMAL(38,0) hot+wide total in
+    micro units (NULL when both bands are). Out-of-domain rows are left
+    out on both engines: a plain-sum fallback would make a ranking on
+    this total engine-dependent."""
+    zero = F.lit(0).cast(_DEC)
+    return F.when(s.hot.isNull() & s.wide.isNull(), F.lit(None)).otherwise(
+        F.coalesce(s.hot, zero) + F.coalesce(s.wide, zero)
     )
 
 
@@ -147,83 +231,102 @@ def dec_to_double(total: Column, scale: float = 1000000.0) -> Column:
     return recon / scale if scale != 1.0 else recon
 
 
-def dec_to_double_sql(total: str, scale: str = "1000000.0") -> str:
+def dec_to_double_sql(total: str, scale: float = 1000000.0) -> str:
     """SQL twin of ``dec_to_double`` (dialect-shared)."""
     recon = (
         f"(CAST(({total}) - (({total}) % {_TWO53}) AS DOUBLE) "
         f"+ CAST(({total}) % {_TWO53} AS DOUBLE))"
     )
-    return f"{recon} / {scale}" if scale else recon
-
-
-def micro_total_to_double(fast: Column, wide: Column, scale: float = 1000000.0) -> Column:
-    """Combine a BIGINT hot-band sum and a DECIMAL(38,0) wide-band sum
-    (``wide`` non-NULL) into the final double value via the 2^53 split
-    (see ``dec_to_double``). ``scale`` is the quantization factor (1e6
-    for micro-unit devices, 1.0 for unit-scale devices)."""
-    total = (
-        F.coalesce(fast.cast("decimal(38,0)"), F.lit(0).cast("decimal(38,0)"))
-        + wide
-    )
-    return dec_to_double(total, scale)
+    return f"{recon} / {scale!r}" if scale != 1.0 else recon
 
 
 def dsum_expr(c: Column) -> Column:
     """Unaliased ``dsum`` — for call sites that derive further columns
     from the exact sum (averages, ratios) before naming them."""
-    n_bad = F.count(F.when(out_of_domain(c), F.lit(1)))
-    n_wide = F.count(F.when(in_wide_band(c), F.lit(1)))
-    fast = F.sum(F.when(micro_exact(c), F.floor(c * 1000000.0 + 0.5)))
-    wide = F.sum(wide_micro(c))
-    return (
-        F.when(n_bad > 0, F.sum(c))
-        .when(n_wide > 0, micro_total_to_double(fast, wide))
-        .otherwise(fast / 1000000.0)
+    return band_total(agg_bands(bands(c)))
+
+
+def bands_sql(x: str, unit: bool = False) -> Bands:
+    """SQL twin of ``bands`` (dialect-shared)."""
+    in_wide = f"({x} {WIDE_SAFE_SQL}) AND NOT ({x} {MICRO_SAFE_SQL})"
+    if unit:
+        hot = f"CAST(floor({x}) AS BIGINT)"
+        wide = f"CASE WHEN {in_wide} THEN CAST(floor({x}) AS DECIMAL(38,0)) END"
+    else:
+        hot = f"CAST(floor({x} * 1000000 + 0.5) AS BIGINT)"
+        wide = (
+            f"CASE WHEN ({x} {MID_SAFE_SQL}) AND NOT ({x} {MICRO_SAFE_SQL}) "
+            f"THEN CAST(floor({x} * 1000000 + 0.5) AS DECIMAL(38,0)) "
+            f"WHEN ({x} {WIDE_SAFE_SQL}) AND NOT ({x} {MID_SAFE_SQL}) "
+            f"THEN CAST(floor({x} + 0.5) AS DECIMAL(38,0)) * 1000000 END"
+        )
+    return Bands(
+        f"CASE WHEN ({x} {MICRO_SAFE_SQL}) THEN {hot} END",
+        wide,
+        x,
+        f"CASE WHEN NOT ({x} {WIDE_SAFE_SQL}) THEN 1 END",
+        f"CASE WHEN {in_wide} THEN 1 END",
     )
 
 
-def wide_micro_sql(x: str) -> str:
-    """SQL twin of ``wide_micro`` (the per-row wide-band DECIMAL(38,0)
-    CASE), dialect-shared."""
+def agg_bands_sql(
+    b: Bands,
+    filter_sql: str = "",
+    over: str = "",
+    distinct: bool = False,
+    exact: bool = False,
+) -> Bands:
+    """SQL twin of ``agg_bands``. ``filter_sql`` (e.g. ``"l_linestatus =
+    'F'"``) appends ``FILTER (WHERE ...)`` to every aggregate for
+    pivot-style conditional cells; ``over`` (e.g. ``"w"``) appends
+    ``OVER w`` for the window-frame form; ``distinct`` makes each value
+    sum a DISTINCT sum (the bands partition the value space, so per-band
+    distinct sums add up to the global distinct sum)."""
+    f = f" FILTER (WHERE {filter_sql})" if filter_sql else ""
+    f += f" OVER {over}" if over else ""
+    d = "DISTINCT " if distinct else ""
+    hot = f"CAST({b.hot} AS DECIMAL(38,0))" if exact else b.hot
+    return Bands(
+        f"sum({d}{hot}){f}",
+        f"sum({d}{b.wide}){f}",
+        f"sum({d}{b.plain}){f}",
+        f"count({b.bad}){f}",
+        f"count({b.nwide}){f}",
+    )
+
+
+def band_total_sql(s: Bands, scale: float = 1000000.0, exact: bool = False) -> str:
+    """SQL twin of ``band_total``. The unguarded CAST of a non-finite or
+    absorption-band value would throw in DuckDB where Spark's floor
+    silently saturates (same totality gap, opposite failure mode), which
+    is why those groups take the plain sum."""
+    if exact:
+        hot = dec_to_double_sql(s.hot, scale)
+    elif scale != 1.0:
+        hot = f"CAST({s.hot} AS BIGINT) / {scale!r}"
+    else:
+        hot = f"CAST(CAST({s.hot} AS BIGINT) AS DOUBLE)"
+    total = f"(COALESCE(CAST({s.hot} AS DECIMAL(38,0)), 0) + {s.wide})"
     return (
-        f"CASE WHEN ({x} {MID_SAFE_SQL}) AND NOT ({x} {MICRO_SAFE_SQL}) "
-        f"THEN CAST(floor({x} * 1000000 + 0.5) AS DECIMAL(38,0)) "
-        f"WHEN ({x} {WIDE_SAFE_SQL}) AND NOT ({x} {MID_SAFE_SQL}) "
-        f"THEN CAST(floor({x} + 0.5) AS DECIMAL(38,0)) * 1000000 END"
+        f"CASE WHEN {s.bad} > 0 THEN {s.plain} "
+        f"WHEN {s.nwide} > 0 THEN {dec_to_double_sql(total, scale)} "
+        f"ELSE {hot} END"
+    )
+
+
+def band_decimal_sql(s: Bands) -> str:
+    """SQL twin of ``band_decimal``."""
+    return (
+        f"CASE WHEN {s.hot} IS NULL AND {s.wide} IS NULL THEN NULL "
+        f"ELSE COALESCE({s.hot}, 0) + COALESCE({s.wide}, 0) END"
     )
 
 
 def dsum_sql(x: str, filter_sql: str = "", over: str = "", distinct: bool = False) -> str:
     """SQL twin of ``dsum``, in the dialect SHARED by Spark and DuckDB so
-    the same text serves both SQL-path queries and DuckDB oracles: BIGINT
-    micro-unit sum on the hot band, DECIMAL(38,0)-combined micro/unit sum
-    on the wide finite band, plain IEEE sum when the group contains any
-    non-finite or absorption-band value (the unguarded CAST throws in
-    DuckDB where Spark's floor silently saturates — same totality gap,
-    opposite failure mode). ``filter_sql`` (e.g. ``"l_linestatus = 'F'"``)
-    appends ``FILTER (WHERE ...)`` to every aggregate for pivot-style
-    conditional cells; ``over`` (e.g. ``"w"``) appends ``OVER w`` for the
-    window-frame form; ``distinct`` makes each band sum a DISTINCT sum
-    (the bands partition the value space, so per-band distinct sums add
-    up to the global distinct sum)."""
-    f = f" FILTER (WHERE {filter_sql})" if filter_sql else ""
-    f += f" OVER {over}" if over else ""
-    d = "DISTINCT " if distinct else ""
-    fast = (
-        f"sum({d}CASE WHEN ({x} {MICRO_SAFE_SQL}) THEN "
-        f"CAST(floor({x} * 1000000 + 0.5) AS BIGINT) END){f}"
-    )
-    wide = f"sum({d}{wide_micro_sql(x)}){f}"
-    total = f"(COALESCE(CAST({fast} AS DECIMAL(38,0)), 0) + {wide})"
-    combined = dec_to_double_sql(total)
-    return (
-        f"CASE WHEN count(CASE WHEN NOT ({x} {WIDE_SAFE_SQL}) THEN 1 END){f} > 0 "
-        f"THEN sum({d}{x}){f} "
-        f"WHEN count(CASE WHEN ({x} {WIDE_SAFE_SQL}) "
-        f"AND NOT ({x} {MICRO_SAFE_SQL}) THEN 1 END){f} > 0 "
-        f"THEN {combined} "
-        f"ELSE CAST({fast} AS BIGINT) / 1000000.0 END"
-    )
+    the same text serves both SQL-path queries and DuckDB oracles; the
+    keyword arguments pick the aggregate form (see ``agg_bands_sql``)."""
+    return band_total_sql(agg_bands_sql(bands_sql(x), filter_sql, over, distinct))
 
 
 def dround(c: Column, n: int) -> Column:

@@ -4,11 +4,27 @@ ops, frame-navigation windows, struct and bitwise scalar functions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kse.queries._util import dec_to_double_sql, dround_sql, dsum, micro_exact, r4, t
+from kse.queries._util import (
+    Bands,
+    agg_bands,
+    agg_bands_sql,
+    band_decimal,
+    band_decimal_sql,
+    band_total,
+    band_total_sql,
+    bands,
+    bands_sql,
+    dec_to_double,
+    dec_to_double_sql,
+    dround_sql,
+    dsum,
+    r4,
+    t,
+)
 from kse.queries._util import dsum_sql as _DSUM
 from kse.registry import register
 
@@ -812,39 +828,18 @@ def q_agg_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events")
     n_salts = 16
     salted = e.withColumn("salt", F.pmod(F.xxhash64("event_id"), F.lit(n_salts)))
-    # exact scaled-integer partial sums: order-independent across the
-    # salt regrouping AND bit-equal to the oracle (see _util.dsum)
-    from kse.queries._util import (
-        in_wide_band,
-        micro_total_to_double,
-        out_of_domain,
-        wide_micro,
-    )
-
-    v = F.col("value")
+    # dsum partials (see _util.dsum), each channel an associative-
+    # commutative sum/count, so the salt regrouping is exact and the
+    # result bit-equal to the oracle's one-stage dsum_sql
+    parts = ("psum", "pwide", "pplain", "pbad", "pnwide")
     partial = salted.groupBy("event_type", "salt").agg(
         F.count("*").alias("pn"),
-        # three-band partials (see _util.dsum), each an associative-
-        # commutative sum/count so the salt regrouping is exact: BIGINT
-        # micro units (hot band), DECIMAL(38,0) micro units (wide finite
-        # band), the plain-sum channel for non-finite/absorption rows,
-        # and the two band counts that pick the final branch
-        F.sum(F.when(micro_exact(v), F.floor(v * 1000000.0 + 0.5))).alias("psum"),
-        F.sum(wide_micro(v)).alias("pwide"),
-        F.sum(v).alias("pplain"),
-        F.count(F.when(out_of_domain(v), F.lit(1))).alias("pbad"),
-        F.count(F.when(in_wide_band(v), F.lit(1))).alias("pnwide"),
+        *(a.alias(n) for a, n in zip(agg_bands(bands(F.col("value"))), parts)),
         F.max("value").alias("pmax"),
     )
     return partial.groupBy("event_type").agg(
         F.sum("pn").alias("n"),
-        F.when(F.sum("pbad") > 0, F.sum("pplain"))
-        .when(
-            F.sum("pnwide") > 0,
-            micro_total_to_double(F.sum("psum"), F.sum("pwide")),
-        )
-        .otherwise(F.sum("psum") / 1000000.0)
-        .alias("sum_value"),
+        band_total(Bands(*(F.sum(n) for n in parts))).alias("sum_value"),
         r4(F.max("pmax"), "max_value"),
     )
 
@@ -1282,30 +1277,15 @@ def q_agg_winsorize_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pareto_rev_sql() -> str:
-    """Oracle text for pareto's per-customer exact DECIMAL(38,0) revenue:
-    three-band micro units (hot + wide), with out-of-domain values
-    (NaN/Inf/|x| > 9e15) excluded DETERMINISTICALLY on both engines —
-    a plain-sum fallback would make the RANKING engine-dependent, and
-    the old unguarded device threw asymmetrically (Spark's floor
-    saturates where DuckDB's CAST rejects)."""
-    from kse.queries._util import MICRO_SAFE_SQL, wide_micro_sql
-
-    x = "o_totalprice"
-    hot = (
-        f"sum(CASE WHEN ({x} {MICRO_SAFE_SQL}) THEN "
-        f"CAST(floor({x} * 1000000 + 0.5) AS DECIMAL(38,0)) END)"
-    )
-    wide = f"sum({wide_micro_sql(x)})"
-    return (
-        f"CASE WHEN {hot} IS NULL AND {wide} IS NULL THEN NULL "
-        f"ELSE COALESCE({hot}, 0) + COALESCE({wide}, 0) END"
-    )
-
+# per-customer revenue: the dsum device's exact DECIMAL(38,0) total
+# (see _util.band_decimal)
+_PARETO_REV = band_decimal_sql(
+    agg_bands_sql(bands_sql("o_totalprice"), exact=True)
+)
 
 _PARETO_ORACLE = f"""
 WITH rev AS (
-  SELECT o_custkey, {_pareto_rev_sql()} AS r
+  SELECT o_custkey, {_PARETO_REV} AS r
   FROM orders GROUP BY o_custkey
 ),
 ranked AS (
@@ -1321,6 +1301,11 @@ SELECT CAST(min(rn) AS BIGINT) AS n_top_customers,
        CAST((SELECT count(*) FROM rev) AS BIGINT) AS n_customers
 FROM ranked WHERE cum * 5 >= tot * 4
 """
+
+
+def _pareto_rev() -> Column:
+    """Column twin of _PARETO_REV."""
+    return band_decimal(agg_bands(bands(F.col("o_totalprice")), exact=True))
 
 
 @register(
@@ -1345,19 +1330,8 @@ FROM ranked WHERE cum * 5 >= tot * 4
     ),
 )
 def q_agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kse.queries._util import dec_to_double, wide_micro
-
     o = t(spark, sf_dir, "orders")
-    p = F.col("o_totalprice")
-    hot = F.sum(
-        F.when(micro_exact(p), F.floor(p * 1000000.0 + 0.5)).cast("decimal(38,0)")
-    )
-    wide = F.sum(wide_micro(p))
-    zero = F.lit(0).cast("decimal(38,0)")
-    r_dec = F.when(hot.isNull() & wide.isNull(), F.lit(None)).otherwise(
-        F.coalesce(hot, zero) + F.coalesce(wide, zero)
-    )
-    rev = o.groupBy("o_custkey").agg(r_dec.alias("r"))
+    rev = o.groupBy("o_custkey").agg(_pareto_rev().alias("r"))
     w = Window.orderBy(F.col("r").desc_nulls_last(), F.col("o_custkey"))
     ranked = rev.select(
         "r",
@@ -1408,19 +1382,8 @@ def q_agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_agg_pareto_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kse.queries._util import dec_to_double, wide_micro
-
     o = t(spark, sf_dir, "orders")
-    p = F.col("o_totalprice")
-    hot = F.sum(
-        F.when(micro_exact(p), F.floor(p * 1000000.0 + 0.5)).cast("decimal(38,0)")
-    )
-    wide = F.sum(wide_micro(p))
-    zero = F.lit(0).cast("decimal(38,0)")
-    r_dec = F.when(hot.isNull() & wide.isNull(), F.lit(None)).otherwise(
-        F.coalesce(hot, zero) + F.coalesce(wide, zero)
-    )
-    rev = o.groupBy("o_custkey").agg(r_dec.alias("r"))
+    rev = o.groupBy("o_custkey").agg(_pareto_rev().alias("r"))
     # bucket id via INTEGRAL division (`div`), not decimal `/` + floor:
     # decimal division depends on spark.sql.decimalOperations.allowPrecisionLoss
     # (disabled, the widened quotient overflows DECIMAL(38,x) to NULL and
@@ -1479,7 +1442,8 @@ def q_agg_pareto_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "cum",
             F.when(F.col("ci").isNull() & F.col("sb").isNull(), F.lit(None)).otherwise(
-                F.coalesce(F.col("sb"), zero) + F.coalesce(F.col("ci"), zero)
+                F.coalesce(F.col("sb"), F.lit(0).cast("decimal(38,0)"))
+                + F.coalesce(F.col("ci"), F.lit(0).cast("decimal(38,0)"))
             ),
         )
     )
@@ -2153,42 +2117,17 @@ def scd2_incremental_apply(spark: SparkSession, sf_dir: str, split: str) -> Data
     )
 
 
-def _all_decimal_dev_sql(x: str) -> str:
-    """Oracle twin of q_agg_groupby_wide's all-DECIMAL device: hot band
-    micro-units accumulate in DECIMAL(38,0) directly (exact past 2^53
-    micro-units — the query's raison d'être), wide finite band via
-    wide_micro, plain IEEE for NaN/Inf/absorption groups; every decimal
-    total converts to double through the 2^53 split (a plain CAST was
-    the latent bug this device existed to avoid but still had: DuckDB's
-    int128->double cast misrounds past 2^53 — _util.dec_to_double)."""
-    from kse.queries._util import (
-        MICRO_SAFE_SQL,
-        WIDE_SAFE_SQL,
-        dec_to_double_sql,
-        wide_micro_sql,
-    )
-
-    hot = (
-        f"sum(CASE WHEN ({x} {MICRO_SAFE_SQL}) THEN "
-        f"CAST(floor({x} * 1000000 + 0.5) AS DECIMAL(38,0)) END)"
-    )
-    wide = f"sum({wide_micro_sql(x)})"
-    return (
-        f"CASE WHEN count(CASE WHEN NOT ({x} {WIDE_SAFE_SQL}) THEN 1 END) > 0 "
-        f"THEN sum({x}) "
-        f"WHEN count(CASE WHEN ({x} {WIDE_SAFE_SQL}) "
-        f"AND NOT ({x} {MICRO_SAFE_SQL}) THEN 1 END) > 0 "
-        f"THEN {dec_to_double_sql(f'(COALESCE({hot}, 0) + {wide})')} "
-        f"ELSE {dec_to_double_sql(hot)} END"
-    )
+def _exact_sum_sql(x: str) -> str:
+    """Oracle twin of q_agg_groupby_wide's exact_sum."""
+    return band_total_sql(agg_bands_sql(bands_sql(x), exact=True), exact=True)
 
 
 @register(
     "q_agg_groupby_wide",
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
-       {_all_decimal_dev_sql('l_extendedprice')} AS sum_base_price,
-       {_all_decimal_dev_sql('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+       {_exact_sum_sql('l_extendedprice')} AS sum_base_price,
+       {_exact_sum_sql('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
        CAST(count(*) AS BIGINT) AS count_order
 FROM lineitem
 GROUP BY l_returnflag, l_linestatus
@@ -2216,41 +2155,16 @@ GROUP BY l_returnflag, l_linestatus
 def q_agg_groupby_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
 
-    from kse.queries._util import (
-        dec_to_double,
-        in_wide_band,
-        out_of_domain,
-        wide_micro,
-    )
-
-    def wide_sum(c, alias):
-        # all-DECIMAL three-band device (_all_decimal_dev_sql is the
-        # oracle twin): hot-band micro-units accumulate in DECIMAL(38,0)
-        # directly — exact past 2^53 micro-units, which is this query's
-        # reason to exist — wide finite band via wide_micro, plain IEEE
-        # for NaN/Inf/absorption groups. All decimal->double conversions
-        # go through the 2^53 split (_util.dec_to_double).
-        hot = F.sum(
-            F.when(micro_exact(c), F.floor(c * 1000000.0 + 0.5)).cast(
-                "decimal(38,0)"
-            )
-        )
-        wide = F.sum(wide_micro(c))
-        return (
-            F.when(F.count(F.when(out_of_domain(c), F.lit(1))) > 0, F.sum(c))
-            .when(
-                F.count(F.when(in_wide_band(c), F.lit(1))) > 0,
-                dec_to_double(
-                    F.coalesce(hot, F.lit(0).cast("decimal(38,0)")) + wide
-                ),
-            )
-            .otherwise(dec_to_double(hot))
-            .alias(alias)
-        )
+    def exact_sum(c: Column, alias: str) -> Column:
+        # the dsum device with the hot band accumulating in DECIMAL(38,0)
+        # — exact past 2^53 micro-units, which is this query's reason to
+        # exist; every decimal->double conversion goes through the 2^53
+        # split (_util.dec_to_double)
+        return band_total(agg_bands(bands(c), exact=True), exact=True).alias(alias)
 
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        wide_sum(F.col("l_extendedprice"), "sum_base_price"),
-        wide_sum(
+        exact_sum(F.col("l_extendedprice"), "sum_base_price"),
+        exact_sum(
             F.col("l_extendedprice") * (1 - F.col("l_discount")), "sum_disc_price"
         ),
         F.count(F.lit(1)).alias("count_order"),

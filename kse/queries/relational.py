@@ -19,9 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kse.queries._util import (
+    agg_bands,
+    band_total,
+    bands,
     dsum,
     grand_total_if_empty,
-    micro_exact,
     r4,
     r6,
     sql_q,
@@ -941,29 +943,12 @@ FROM lineitem GROUP BY l_returnflag
     "identically on both engines).",
 )
 def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kse.queries._util import (
-        in_wide_band,
-        micro_total_to_double,
-        out_of_domain,
-        wide_micro,
-    )
-
     li = t(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity")
-    fast = F.sum_distinct(F.when(micro_exact(q), F.floor(q * 1000000.0 + 0.5)))
-    wide = F.sum_distinct(wide_micro(q))
+    distinct_sums = agg_bands(bands(F.col("l_quantity")), F.sum_distinct)
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
-        F.when(
-            F.count(F.when(out_of_domain(q), F.lit(1))) > 0, F.sum_distinct(q)
-        )
-        .when(
-            F.count(F.when(in_wide_band(q), F.lit(1))) > 0,
-            micro_total_to_double(fast, wide),
-        )
-        .otherwise(fast / 1000000.0)
-        .alias("sum_dist_qty"),
+        band_total(distinct_sums).alias("sum_dist_qty"),
     )
 
 

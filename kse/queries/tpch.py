@@ -26,50 +26,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kse.queries._util import dround_sql, dsum, dsum_expr, dsum_sql, micro_exact, t
+from kse.queries._util import (
+    agg_bands,
+    agg_bands_sql,
+    band_total,
+    band_total_sql,
+    bands,
+    bands_sql,
+    dround_sql,
+    dsum,
+    dsum_expr,
+    dsum_sql,
+    micro_exact,
+    t,
+)
 from kse.registry import register
 
-# oracle twin of _util.dsum, generated from the single source of truth
-# (guarded three-band device: BIGINT micro hot path, DECIMAL(38,0) wide
-# finite band, plain IEEE sum for non-finite/absorption groups — see
-# _util.dsum / dsum_sql). The "{x}" placeholder survives the generation
-# so existing .format(x=...) call sites keep working.
-_MICRO = dsum_sql("{x}")
-
-_REV = _MICRO.format(x="l_extendedprice * (1 - l_discount)")
-
-
-def _trunc_qty_sql(x: str) -> str:
-    """Three-band TRUNCATING unit-scale sum device for l_quantity (q1's
-    sum_qty uses floor, not round: CAST(double AS BIGINT) truncates in
-    Spark but rounds in DuckDB). Hot band sums BIGINT floor(x); the wide
-    finite band (9e9..9e15, where floor still fits BIGINT per value but
-    the group total may not) sums DECIMAL(38,0); NaN/Inf/absorption
-    groups take the plain IEEE sum. Unified to DOUBLE output across
-    branches via the 2^53 split (see _util.dec_to_double_sql)."""
-    from kse.queries._util import (
-        MICRO_SAFE_SQL,
-        WIDE_SAFE_SQL,
-        dec_to_double_sql,
-    )
-
-    fast = (
-        f"sum(CASE WHEN ({x} {MICRO_SAFE_SQL}) THEN "
-        f"CAST(floor({x}) AS BIGINT) END)"
-    )
-    wide = (
-        f"sum(CASE WHEN ({x} {WIDE_SAFE_SQL}) AND NOT ({x} {MICRO_SAFE_SQL}) "
-        f"THEN CAST(floor({x}) AS DECIMAL(38,0)) END)"
-    )
-    total = f"(COALESCE(CAST({fast} AS DECIMAL(38,0)), 0) + {wide})"
-    return (
-        f"CASE WHEN count(CASE WHEN NOT ({x} {WIDE_SAFE_SQL}) THEN 1 END) > 0 "
-        f"THEN sum({x}) "
-        f"WHEN count(CASE WHEN ({x} {WIDE_SAFE_SQL}) "
-        f"AND NOT ({x} {MICRO_SAFE_SQL}) THEN 1 END) > 0 "
-        f"THEN {dec_to_double_sql(total, scale='')} "
-        f"ELSE CAST(CAST({fast} AS BIGINT) AS DOUBLE) END"
-    )
+_REV = dsum_sql("l_extendedprice * (1 - l_discount)")
 
 
 def _rev(alias: str) -> F.Column:
@@ -210,7 +183,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_tpch_q6",
     oracle=f"""
-SELECT {_MICRO.format(x='l_extendedprice * l_discount')} AS revenue
+SELECT {dsum_sql('l_extendedprice * l_discount')} AS revenue
 FROM lineitem
 WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07
@@ -309,8 +282,8 @@ WITH base AS (
 ),
 agg AS (
   SELECT o_year,
-         {_MICRO.format(x="CASE WHEN supp_nation = 'NATION_3' THEN rev ELSE 0 END")} AS nation_vol,
-         {_MICRO.format(x='rev')} AS total_vol
+         {dsum_sql("CASE WHEN supp_nation = 'NATION_3' THEN rev ELSE 0 END")} AS nation_vol,
+         {dsum_sql('rev')} AS total_vol
   FROM base GROUP BY o_year
 )
 SELECT o_year, nation_vol, total_vol,
@@ -413,8 +386,8 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_tpch_q14",
     oracle=f"""
 WITH agg AS (
-  SELECT {_MICRO.format(x="CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")} AS promo_rev,
-         {_MICRO.format(x='l_extendedprice * (1 - l_discount)')} AS total_rev
+  SELECT {dsum_sql("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")} AS promo_rev,
+         {dsum_sql('l_extendedprice * (1 - l_discount)')} AS total_rev
   FROM lineitem JOIN part ON l_partkey = p_partkey
   WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-02-01'
 )
@@ -547,7 +520,7 @@ WITH avg_bal AS (
 )
 SELECT c_nationkey,
        CAST(count(*) AS BIGINT) AS numcust,
-       {_MICRO.format(x='c_acctbal')} AS totacctbal
+       {dsum_sql('c_acctbal')} AS totacctbal
 FROM customer
 WHERE c_acctbal > (SELECT ab FROM avg_bal)
   AND NOT EXISTS (SELECT 1 FROM orders
@@ -591,17 +564,23 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# q1's sum_qty: the dsum device at truncating unit scale
+_SUM_QTY = band_total_sql(
+    agg_bands_sql(bands_sql("l_quantity", unit=True)), scale=1.0
+)
+
+
 @register(
     "q_tpch_q1",
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
-       {_trunc_qty_sql('l_quantity')} AS sum_qty,
-       {_MICRO.format(x='l_extendedprice')} AS sum_base_price,
-       {_MICRO.format(x='l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-       {_MICRO.format(x='l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
-       ({_trunc_qty_sql('l_quantity')}) / CAST(count(*) AS BIGINT) AS avg_qty,
-       ({_MICRO.format(x='l_extendedprice')}) / CAST(count(*) AS BIGINT) AS avg_price,
-       ({_MICRO.format(x='l_discount')}) / CAST(count(*) AS BIGINT) AS avg_disc,
+       {_SUM_QTY} AS sum_qty,
+       {dsum_sql('l_extendedprice')} AS sum_base_price,
+       {dsum_sql('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+       {dsum_sql('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
+       ({_SUM_QTY}) / CAST(count(*) AS BIGINT) AS avg_qty,
+       ({dsum_sql('l_extendedprice')}) / CAST(count(*) AS BIGINT) AS avg_price,
+       ({dsum_sql('l_discount')}) / CAST(count(*) AS BIGINT) AS avg_disc,
        CAST(count(*) AS BIGINT) AS count_order
 FROM lineitem
 WHERE l_shipdate <= DATE '2001-09-01'
@@ -620,33 +599,13 @@ GROUP BY l_returnflag, l_linestatus
     ),
 )
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kse.queries._util import dsum_expr, micro_exact
-
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "2001-09-01")
     cnt = F.count(F.lit(1))
-    lq = F.col("l_quantity")
-    from kse.queries._util import (
-        in_wide_band,
-        micro_total_to_double,
-        out_of_domain,
-    )
-
     # floor, not cast: CAST(double AS BIGINT) truncates in Spark but
     # rounds in DuckDB (q_fn_cast's documented trap) — floor agrees on
-    # both engines for the non-negative quantities. Full three-band
-    # device at UNIT scale (_trunc_qty_sql is the oracle twin): hot-band
-    # BIGINT floor, DECIMAL(38,0) wide band, plain IEEE for
-    # NaN/Inf/absorption groups; branches unify to DOUBLE.
-    qty_fast = F.sum(F.when(micro_exact(lq), F.floor(lq)))
-    qty_wide = F.sum(F.when(in_wide_band(lq), F.floor(lq).cast("decimal(38,0)")))
-    qty = (
-        F.when(F.count(F.when(out_of_domain(lq), F.lit(1))) > 0, F.sum(lq))
-        .when(
-            F.count(F.when(in_wide_band(lq), F.lit(1))) > 0,
-            micro_total_to_double(qty_fast, qty_wide, scale=1.0),
-        )
-        .otherwise(qty_fast.cast("double"))
-    )
+    # both engines for the non-negative quantities. The dsum device at
+    # UNIT scale (_SUM_QTY is the oracle twin); branches unify to DOUBLE.
+    qty = band_total(agg_bands(bands(F.col("l_quantity"), unit=True)), scale=1.0)
     price_g = dsum_expr(F.col("l_extendedprice"))
     disc_g = dsum_expr(F.col("l_discount"))
     return (
@@ -933,7 +892,7 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_tpch_q17",
     oracle=f"""
-SELECT ({_MICRO.format(x='l_extendedprice')}) / 7.0 AS avg_yearly
+SELECT ({dsum_sql('l_extendedprice')}) / 7.0 AS avg_yearly
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE p_brand = 'Brand#23' AND p_type = 'SMALL'
   AND l_quantity < (

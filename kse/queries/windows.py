@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kse.queries._util import micro_exact, t, ts_us
+from kse.queries._util import Bands, agg_bands, band_total, bands, t, ts_us
 from kse.queries._util import dsum_sql as _DSUM
 from kse.registry import register
 
@@ -286,28 +286,13 @@ def q_win_sliding_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("l_shipdate", "l_orderkey", "l_linenumber", "l_extendedprice")
         .rowsBetween(-2, Window.currentRow)
     )
-    from kse.queries._util import (
-        in_wide_band,
-        micro_total_to_double,
-        out_of_domain,
-        wide_micro,
-    )
-
-    e = F.col("l_extendedprice")
-    # the full three-band dsum device over the frame (see _util.dsum): a
-    # frame holding any Inf/NaN/absorption value uses the plain IEEE sum
-    # on both engines (the result is ±Inf/NaN regardless of the engine's
-    # frame accumulation strategy), finite 9e9..9e15 values go through
-    # the exact DECIMAL(38,0) wide band
-    nbad = F.count(F.when(out_of_domain(e), F.lit(1))).over(w)
-    nwide = F.count(F.when(in_wide_band(e), F.lit(1))).over(w)
-    msum = F.sum(F.when(micro_exact(e), F.floor(e * 1000000.0 + 0.5))).over(w)
-    wsum = F.sum(wide_micro(e)).over(w)
-    frame_sum = (
-        F.when(nbad > 0, F.sum(e).over(w))
-        .when(nwide > 0, micro_total_to_double(msum, wsum))
-        .otherwise(msum / F.lit(1000000.0))
-    )
+    # the dsum device over the frame (see _util.dsum): a frame holding
+    # any Inf/NaN/absorption value uses the plain IEEE sum on both
+    # engines (the result is ±Inf/NaN regardless of the engine's frame
+    # accumulation strategy), finite 9e9..9e15 values go through the
+    # exact DECIMAL(38,0) wide band
+    frame = agg_bands(bands(F.col("l_extendedprice")))
+    frame_sum = band_total(Bands(*(a.over(w) for a in frame)))
     return li.select(
         "l_suppkey",
         "l_orderkey",

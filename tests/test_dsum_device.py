@@ -7,11 +7,13 @@ partial aggregation and need not bit-match DuckDB's sequential sum. The
 fix adds an exact DECIMAL(38,0) micro/unit band for finite 9e9..9e15 and
 restricts the plain-IEEE fallback to non-finite / absorption-band groups.
 
-These tests pin the device head-to-head against its dsum_sql twin on
-BOTH engines (DuckDB oracle AND spark.sql of the same text — the device
-is dialect-shared), across repartitionings (order independence), for
-every band and boundary, including the decimal->double 2^53 split that
-works around DuckDB's misrounded int128->double cast.
+These tests pin the device head-to-head against its SQL twin on BOTH
+engines (DuckDB oracle AND spark.sql of the same text — the device is
+dialect-shared), in every form a query uses it (plain, window frame,
+DISTINCT, FILTER, salted two-stage, unit scale, DECIMAL hot band,
+DECIMAL total), across repartitionings (order independence), for every
+band and boundary, including the decimal->double 2^53 split that works
+around DuckDB's misrounded int128->double cast.
 """
 
 from __future__ import annotations
@@ -21,8 +23,22 @@ import math
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from kse.queries._util import dsum, dsum_sql
+from kse.queries._util import (
+    Bands,
+    agg_bands,
+    agg_bands_sql,
+    band_decimal,
+    band_decimal_sql,
+    band_total,
+    band_total_sql,
+    bands,
+    bands_sql,
+    dsum,
+    dsum_expr,
+    dsum_sql,
+)
 
 CASES = {
     "hot": [0.5, 123.45, -67.89, 0.000001],
@@ -57,10 +73,25 @@ def _same(a, b):
     return a == b
 
 
+# (g, i, x): i is a global row index, the window forms' order key
+ROWS = [
+    (g, i, v)
+    for i, (g, v) in enumerate((g, v) for g, vals in CASES.items() for v in vals)
+]
+
+
 @pytest.fixture(scope="module")
 def band_df(spark):
-    rows = [(g, v) for g, vals in CASES.items() for v in vals]
-    return spark.createDataFrame(rows, "g string, x double")
+    return spark.createDataFrame(ROWS, "g string, i int, x double")
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = duckdb.connect()
+    con.execute("CREATE TABLE dsum_tt (g VARCHAR, i INTEGER, x DOUBLE)")
+    con.executemany("INSERT INTO dsum_tt VALUES (?, ?, ?)", ROWS)
+    yield con
+    con.close()
 
 
 def _spark_results(band_df, npart):
@@ -81,23 +112,93 @@ def test_dsum_order_independent_across_partitionings(band_df):
             assert _same(base[g], got[g]), (g, base[g], got[g])
 
 
-def test_dsum_matches_duckdb_oracle_per_band(band_df):
-    spark_res = _spark_results(band_df, 7)
-    con = duckdb.connect()
-    con.execute("CREATE TABLE tt (g VARCHAR, x DOUBLE)")
-    con.executemany(
-        "INSERT INTO tt VALUES (?, ?)",
-        [(g, v) for g, vals in CASES.items() for v in vals],
+def _window_form(df):
+    w = Window.partitionBy("g").orderBy("i").rowsBetween(-2, Window.currentRow)
+    frame = agg_bands(bands(F.col("x")))
+    return df.select("g", "i", band_total(Bands(*(a.over(w) for a in frame))))
+
+
+def _salted_form(df):
+    parts = [f"p_{k}" for k in Bands._fields]
+    partial = df.groupBy("g", (F.col("i") % 3).alias("salt")).agg(
+        *(a.alias(n) for a, n in zip(agg_bands(bands(F.col("x"))), parts))
     )
-    oracle = dict(
-        con.execute(
-            f"SELECT g, {dsum_sql('x')} AS s FROM tt GROUP BY g"
-        ).fetchall()
+    return partial.groupBy("g").agg(band_total(Bands(*(F.sum(n) for n in parts))))
+
+
+def _pivot_form(df):
+    cells = (
+        df.withColumn("par", F.col("i") % 2)
+        .groupBy("g")
+        .pivot("par", [0])
+        .agg(dsum_expr(F.col("x")))
     )
-    for g in spark_res:
-        assert _same(spark_res[g], oracle[g]), (g, spark_res[g], oracle[g])
-    # the advisor's case lands on the exact value, not an IEEE association
-    assert spark_res["advisor"] == 10000000001.3
+    return cells.select("g", "`0`")
+
+
+def _grouped(device):
+    return lambda df: df.groupBy("g").agg(device(F.col("x")))
+
+
+def _per_g(expr: str) -> str:
+    return f"SELECT g, {expr} AS s FROM dsum_tt GROUP BY g"
+
+
+_EXACT = agg_bands_sql(bands_sql("x"), exact=True)
+
+# form -> (DataFrame form over band_df, its SQL twin over dsum_tt); each
+# yields (key columns..., value)
+FORMS = {
+    "plain": (_grouped(dsum_expr), _per_g(dsum_sql("x"))),
+    "window_frame": (
+        _window_form,
+        f"SELECT g, i, {dsum_sql('x', over='w')} AS s FROM dsum_tt "
+        "WINDOW w AS (PARTITION BY g ORDER BY i "
+        "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)",
+    ),
+    "distinct": (
+        _grouped(lambda x: band_total(agg_bands(bands(x), F.sum_distinct))),
+        _per_g(dsum_sql("x", distinct=True)),
+    ),
+    "filter_pivot_cell": (_pivot_form, _per_g(dsum_sql("x", "i % 2 = 0"))),
+    "salted_two_stage": (_salted_form, _per_g(dsum_sql("x"))),
+    "unit_truncating": (
+        _grouped(lambda x: band_total(agg_bands(bands(x, unit=True)), scale=1.0)),
+        _per_g(band_total_sql(agg_bands_sql(bands_sql("x", unit=True)), scale=1.0)),
+    ),
+    "decimal_hot_band": (
+        _grouped(lambda x: band_total(agg_bands(bands(x), exact=True), exact=True)),
+        _per_g(band_total_sql(_EXACT, exact=True)),
+    ),
+    "decimal_total": (
+        _grouped(lambda x: band_decimal(agg_bands(bands(x), exact=True))),
+        _per_g(band_decimal_sql(_EXACT)),
+    ),
+}
+
+
+def _by_key(rows):
+    return {tuple(r)[:-1]: tuple(r)[-1] for r in rows}
+
+
+@pytest.mark.parametrize("form", list(FORMS))
+def test_dsum_matches_duckdb_oracle_per_band(spark, band_df, duck, form):
+    """Each form of the device agrees bit-for-bit, per band and boundary
+    case, with its SQL twin run on DuckDB and on spark.sql."""
+    column_form, sql = FORMS[form]
+    got = _by_key(column_form(band_df.repartition(7)).collect())
+    band_df.createOrReplaceTempView("dsum_tt")
+    for engine, rows in (
+        ("duckdb", duck.execute(sql).fetchall()),
+        ("spark.sql", spark.sql(sql).collect()),
+    ):
+        want = _by_key(rows)
+        assert got.keys() == want.keys(), (engine, got.keys() ^ want.keys())
+        for k in got:
+            assert _same(got[k], want[k]), (engine, k, got[k], want[k])
+    if form == "plain":
+        # the advisor's case lands on the exact value, not an IEEE association
+        assert got[("advisor",)] == 10000000001.3
 
 
 def test_dsum_sql_text_is_dialect_shared(spark, band_df):

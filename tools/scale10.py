@@ -357,31 +357,11 @@ def main() -> None:
         open(os.path.join(dest, "_DONE"), "w").close()
         print(f"# synthesized {mult}x at {dest} in {time.perf_counter()-t0:.1f}s")
 
-    # the generated dir IS the engine layout (multi-file, micros timestamps)
-    catalog._LAYOUTS[dest] = dest
-
-    # fact tables additionally land as bucketed tables, mirroring
-    # prepare_local_layout's full _LAYOUT_BUCKETS map (events by user_id
-    # for the per-user window ops; lineitem/orders by orderkey so the
-    # join-heavy ops measure the CO-LOCATED plan they'd run at 100 TB —
-    # bucket-pruned scans, no fact-side Exchange before the join)
-    import hashlib
-
-    tag = hashlib.md5(dest.encode()).hexdigest()[:8]
-    for tname, key in catalog._LAYOUT_BUCKETS.items():
-        tbl = f"kse_s10_{tname}_{tag}"
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            spark.read.parquet(os.path.join(dest, f"{tname}.parquet"))
-            .repartition(16, key)
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", os.path.join(dest, f"{tname}_bucketed"))
-            .bucketBy(16, key)
-            .sortBy(key)
-            .saveAsTable(tbl)
-        )
-        catalog._LAYOUT_TABLES[(dest, tname)] = tbl
+    # the generated dir IS the engine layout (multi-file, micros
+    # timestamps); the fact tables additionally land bucketed there, so
+    # the join-heavy and per-user window ops measure the CO-LOCATED plan
+    # they'd run at 100 TB — bucket-pruned scans, no fact-side Exchange
+    catalog.adopt_layout(spark, dest, dest)
 
     def mat(df):
         df.write.mode("overwrite").format("noop").save()

@@ -69,10 +69,12 @@ WHITELIST: dict[str, tuple[int, str]] = {
         "vector table; 0.04x of DuckDB at 10x",
     ),
     "q_sql_scd2_incremental": (
-        4,
-        "hist x2 (dim window + stored-max-version) and delta x2 (first "
-        "change + new versions) — priced in the op docstring; a delta "
-        "checkpoint was tried and rejected (write ~= saved scan)",
+        3,
+        "hist for the dim pass, delta for the new versions, and one "
+        "combined feed scan for the per-key lookup (max version + first "
+        "change in one conditional aggregate) — priced in the op "
+        "docstring; a delta checkpoint was tried and rejected (write ~= "
+        "saved scan)",
     ),
     "q_join_theta_cdf": (
         4,
