@@ -16,7 +16,7 @@ Oracle-parity rules used across all modules (SURVEY.md §7.6):
 
 from __future__ import annotations
 
-from typing import Any, Callable, NamedTuple
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,9 +42,9 @@ def sql_q(spark: SparkSession, sf_dir: str, sql: str, tables: list[str]) -> Data
 # the micro-unit device's own exactness bound (see dsum): a BIGINT sum
 # of floor(x*1e6) values stays exact (and round-trips the final double
 # division) while each |x| <= ~9e9 and the group total stays under 2^53
-# micro-units. Finite values beyond that take the wide DECIMAL/HUGEINT
-# band (see dsum); only non-finite or absorption-band (> ~9e15) rows
-# send the whole group down the plain IEEE path.
+# micro-units. Finite values beyond that take the wide band (see dsum);
+# only non-finite or absorption-band (> ~9e15) rows send the whole group
+# down the plain IEEE path.
 _MICRO_SAFE = 9.0e9
 MICRO_SAFE_SQL = "BETWEEN -9000000000.0 AND 9000000000.0"
 
@@ -77,13 +77,14 @@ def dsum(c: Column, alias: str) -> Column:
     Rounding a float sum is boundary-fragile: Spark and DuckDB accumulate
     in different orders, so sums differ by ~1e-9 relative and any rounding
     quantum occasionally straddles a boundary (observed in practice).
-    Instead: scale each value to integer micro-units (floor(x*1e6+0.5), positive values — the
-    testdata values are 2-dp-like, so products of up to three factors are
-    exactly 6-dp and the scaling is exact), sum as BIGINT (exact, order-
-    independent, and ~2x faster than DECIMAL aggregation — profiled), then
-    divide back in double. Bit-for-bit equal on both engines while the
-    integer sum stays under 2^53 (~9e9 in value terms — true at every test
-    sf; at genuine 100 TB scale switch the scale factor or report DECIMAL).
+    Instead: scale each value to integer micro-units (floor(x*1e6+0.5) —
+    the testdata values are 2-dp-like, so products of up to three factors
+    are exactly 6-dp and the scaling is exact), sum as BIGINT (exact and
+    order-independent), then divide back in double. Bit-for-bit equal on
+    both engines while the integer sum stays under 2^53 (~9e9 in value
+    terms — true at every test sf; past it the hot sum still converts
+    correctly rounded on both engines, and ``exact=True`` below keeps the
+    sum exact past 2^63).
 
     The micro-unit path is defined only on FINITE doubles: Spark's
     ``floor(double)`` is a silent saturating java cast, so ``floor(Inf)``
@@ -94,11 +95,11 @@ def dsum(c: Column, alias: str) -> Column:
     - ``|x| <= 9e9``: the hot path above — BIGINT micro units.
     - ``9e9 < |x| <= 9e15`` finite: the wide band. A plain IEEE fallback
       here would be order-dependent under Spark's partial aggregation
-      (one 1e10 among small values rounds differently per association,
-      flagged by the round-5 advisor), so these groups sum exactly in
-      DECIMAL(38,0) micro units instead: ``floor(x*1e6+0.5)`` while that
-      stays inside BIGINT (|x| <= 9e12), unit-scale ``floor(x+0.5)*1e6``
-      above it (micro precision is already below one double ulp there).
+      (one 1e10 among small values rounds differently per association),
+      so these groups sum exactly: ``floor(x*1e6+0.5)`` micro units while
+      that stays inside BIGINT (|x| <= 9e12), unit-scale
+      ``floor(x+0.5)*1e6`` above it (micro precision is already below one
+      double ulp there).
     - any NaN/±Inf or ``|x| > 9e15`` in the group: plain IEEE double sum.
       Inf/NaN propagation is order-independent, and beyond ~9e15 a huge
       value absorbs small addends in any association order, so the
@@ -106,87 +107,158 @@ def dsum(c: Column, alias: str) -> Column:
       comparable >9e15 values — documented out-of-domain (report DECIMAL
       inputs if you genuinely sum astronomic doubles).
 
+    Layout: four aggregates per sum, all BIGINT or double, so no
+    DECIMAL(38,0) aggregation buffer exists on the hot path. A wide row's
+    exact micro value ``q`` is split across two BIGINT channels:
+
+    ======================  ==============================  ===============
+    band                    ``hot``                         ``units``
+    ======================  ==============================  ===============
+    ``|x| <= 9e9``          ``q = floor(x*1e6+0.5)``        NULL
+    ``9e9 < |x| <= 9e12``   ``q - floor(x)*1e6`` (exact)    ``floor(x)``
+    ``9e12 < |x| <= 9e15``  0                               ``floor(x+0.5)``
+    ======================  ==============================  ===============
+
+    plus ``plain`` (x itself) and the ``bad`` count. ``sum(units) IS NOT
+    NULL`` says the group holds a wide row; only then does the final
+    projection build ``Σhot + Σunits·1e6`` as DECIMAL(38,0) — once per
+    group, the same exact integer as a per-row DECIMAL wide sum — and
+    convert it through the 2^53 split (``dec_to_double``).
+
+    Overflow bound: each BIGINT channel value is at most ~9e15 in
+    magnitude (the hot band's edge in micro units, the unit band's edge
+    in units), so a group sums at least 1,024 rows at the band edge
+    before a channel leaves BIGINT. Past that, ANSI mode (pinned by
+    ``kse.session``) makes Spark raise ARITHMETIC_OVERFLOW: the sum fails
+    loudly, it never wraps or turns NULL (DuckDB sums BIGINT into HUGEINT,
+    so the oracle side never wraps either). ``exact=True`` accumulates
+    both channels in DECIMAL(38,0) instead, for groups past that bound.
+
+    Measured on ``q_agg_groupby`` (4 sums; 4 cores, 9 interleaved fresh
+    executions per variant, Arrow collect), the query body's median:
+
+    ==========================================================  =======
+    variant                                                     body
+    ==========================================================  =======
+    five aggregates per sum, one a DECIMAL(38,0) wide sum       0.72 s
+    six BIGINT aggregates per sum (wide band as BIGINT limbs)   0.58-0.70 s
+    four aggregates per sum (this layout)                       0.44 s
+    three aggregates per sum (no wide band at all)              0.40 s
+    plain ``sum``                                               0.25 s
+    ==========================================================  =======
+
+    The cost follows the number of aggregate buffers as well as the
+    byte-array DECIMAL buffer (DESIGN.md, "dsum: buffers, not limbs").
+
     The device is two pieces, each with a SQL-text twin, and this module
     is the only place that knows the bands: ``bands``/``bands_sql`` split
-    a row into five channels, ``band_total``/``band_total_sql`` combine
-    the aggregated channels into the final double (``band_decimal`` /
-    ``band_decimal_sql`` into the exact DECIMAL(38,0) total instead).
-    Every form is a caller's choice of aggregate over the channels:
+    a row into the four channels, ``band_total``/``band_total_sql``
+    combine the aggregated channels into the final double
+    (``band_decimal``/``band_decimal_sql`` into the exact DECIMAL(38,0)
+    total instead). Every form is a caller's choice of aggregate over the
+    channels:
 
     - plain: ``dsum``/``dsum_expr`` — ``dsum_sql(x)``;
     - window frame: each ``agg_bands`` aggregate ``.over(w)`` —
       ``dsum_sql(x, over="w")`` (q_win_sliding_frame);
-    - DISTINCT: ``agg_bands(b, F.sum_distinct)`` —
-      ``dsum_sql(x, distinct=True)`` (q_agg_distinct);
     - FILTER / pivot cell: ``dsum_expr`` under ``pivot`` —
       ``dsum_sql(x, filter_sql)`` (q_agg_pivot);
     - salted two-stage: ``agg_bands`` per (key, salt), ``F.sum`` of each
       partial channel per key, then ``band_total`` — ``dsum_sql(x)``
       (q_agg_skew_salted);
     - unit-scale truncating: ``bands(c, unit=True)`` and
-      ``band_total(s, scale=1.0)`` (q_tpch_q1's sum_qty);
-    - DECIMAL-accumulating hot band: ``agg_bands(b, exact=True)`` and
+      ``band_total(s, scale=1.0)`` — ``hot`` carries ``floor(x)`` in the
+      hot band, ``units`` carries ``floor(x)`` in the wide band with a
+      scale of 1 (q_tpch_q1's sum_qty);
+    - DECIMAL-accumulating: ``agg_bands(b, exact=True)`` and
       ``band_total(s, exact=True)`` — exact past 2^63 micro units
       (q_agg_groupby_wide);
     - DECIMAL total: ``band_decimal(agg_bands(b, exact=True))``, the
       exact total with out-of-domain rows left out (q_agg_pareto's rank
-      key).
+      key);
+    - DISTINCT: ``dsum_expr(c, distinct=True)`` —
+      ``dsum_sql(x, distinct=True)`` (q_agg_distinct). The exception to
+      the layout: a wide row's remainder in ``hot`` could be deduplicated
+      against a hot row's micro value (1e10+0.25 and 0.25 both carry
+      250000), and ``units`` is not injective either, so the DISTINCT
+      layout keeps an injective wide channel in the ``units`` slot — the
+      wide row's whole micro value as DECIMAL(38,0) — and ``hot`` carries
+      only hot-band micro values (0 on wide rows). The bands partition
+      the value space, so the per-channel distinct sums add up to the
+      global distinct sum.
     """
     return dsum_expr(c).alias(alias)
 
 
 class Bands(NamedTuple):
-    """The device's five channels (see ``dsum``): per row from ``bands``
+    """The device's four channels (see ``dsum``): per row from ``bands``
     / ``bands_sql``, or aggregated by the caller. Columns on the
     DataFrame side, SQL text on the oracle side."""
 
-    hot: Any  # hot-band units (BIGINT); NULL outside |x| <= 9e9
-    wide: Any  # wide-band micro units (DECIMAL(38,0)); NULL outside it
+    hot: Any  # hot-band units / wide remainder / 0 (BIGINT); NULL off-domain
+    units: Any  # wide band's whole units (BIGINT); NULL outside it
     plain: Any  # x itself: the IEEE channel for out-of-domain groups
     bad: Any  # 1 for NaN, ±Inf or |x| > 9e15, else NULL (counted)
-    nwide: Any  # 1 for finite 9e9 < |x| <= 9e15, else NULL (counted)
 
 
-def bands(c: Column, unit: bool = False) -> Bands:
-    """Per-row channels of ``c``. The quantiser is the rounded micro unit
-    ``floor(x*1e6+0.5)``, or with ``unit`` the truncated unit ``floor(x)``
-    (whose wide band fits BIGINT per value, so it needs no mid split)."""
+def bands(c: Column, unit: bool = False, distinct: bool = False) -> Bands:
+    """Per-row channels of ``c`` (the table in ``dsum``). The quantiser
+    is the rounded micro unit ``floor(x*1e6+0.5)``, or with ``unit`` the
+    truncated unit ``floor(x)`` (whose wide band fits BIGINT per value,
+    so it needs no mid split). ``distinct``: the DISTINCT layout, whose
+    ``units`` slot holds the wide row's whole micro value as
+    DECIMAL(38,0)."""
+    hot_band = micro_exact(c)
     in_domain = c.between(-_WIDE_SAFE, _WIDE_SAFE)
-    in_wide = in_domain & ~micro_exact(c)
+    in_mid = c.between(-_MID_SAFE, _MID_SAFE)
+    q = F.floor(c * 1000000.0 + 0.5)
     if unit:
-        hot = F.floor(c)
-        wide = F.when(in_wide, F.floor(c).cast(_DEC))
+        hot = F.when(hot_band, F.floor(c))
+        units = F.when(in_domain & ~hot_band, F.floor(c))
+    elif distinct:
+        hot = F.when(hot_band, q)
+        units = F.when(hot_band, F.lit(None)).when(in_mid, q.cast(_DEC))
+        units = units.when(in_domain, F.floor(c + 0.5).cast(_DEC) * 1000000)
     else:
-        hot = F.floor(c * 1000000.0 + 0.5)
-        in_mid = c.between(-_MID_SAFE, _MID_SAFE) & ~micro_exact(c)
-        in_unit = in_domain & ~c.between(-_MID_SAFE, _MID_SAFE)
-        wide = F.when(in_mid, F.floor(c * 1000000.0 + 0.5).cast(_DEC)).when(
-            in_unit, F.floor(c + 0.5).cast(_DEC) * 1000000
-        )
-    return Bands(
-        F.when(micro_exact(c), hot),
-        wide,
-        c,
-        F.when(~in_domain, F.lit(1)),
-        F.when(in_wide, F.lit(1)),
-    )
+        hot = F.when(hot_band, q).when(in_mid, q - F.floor(c) * 1000000)
+        units = F.when(hot_band, F.lit(None)).when(in_mid, F.floor(c))
+        units = units.when(in_domain, F.floor(c + 0.5))
+    # hot is 0 (never NULL) on the rest of the domain, so a NULL hot sum
+    # means the group holds no in-domain value
+    hot = hot.when(in_domain, F.lit(0))
+    return Bands(hot, units, c, F.when(~in_domain, F.lit(1)))
 
 
-def agg_bands(
-    b: Bands, total: Callable[[Column], Column] = F.sum, exact: bool = False
-) -> Bands:
-    """Group aggregates of per-row channels: ``total`` (``F.sum``,
-    ``F.sum_distinct``) over the three value channels, a plain count over
-    the two flags. ``exact`` accumulates the hot band in DECIMAL(38,0)."""
-    hot = b.hot.cast(_DEC) if exact else b.hot
-    return Bands(
-        total(hot), total(b.wide), total(b.plain), F.count(b.bad), F.count(b.nwide)
-    )
+def agg_bands(b: Bands, distinct: bool = False, exact: bool = False) -> Bands:
+    """Group aggregates of per-row channels: a sum (``distinct``: a
+    DISTINCT sum) over the three value channels, a plain count over the
+    ``bad`` flag. ``exact`` accumulates both integer channels in
+    DECIMAL(38,0)."""
+    total = F.sum_distinct if distinct else F.sum
+    hot, units = b.hot, b.units
+    if exact:
+        hot, units = hot.cast(_DEC), units.cast(_DEC)
+    return Bands(total(hot), total(units), total(b.plain), F.count(b.bad))
 
 
-def band_total(s: Bands, scale: float = 1000000.0, exact: bool = False) -> Column:
+def band_decimal(s: Bands, scale: float = 1000000.0, distinct: bool = False) -> Column:
+    """Aggregated channels -> the exact DECIMAL(38,0) total ``Σhot +
+    Σunits·scale`` (micro units by default; NULL when the group holds no
+    in-domain value; ``distinct``: the DISTINCT layout, whose ``units``
+    already holds micro units). Out-of-domain rows are left out on both
+    engines: a plain-sum fallback would make a ranking on this total
+    engine-dependent."""
+    units = s.units.cast(_DEC)
+    if not distinct and scale != 1.0:
+        units = units * int(scale)
+    return s.hot.cast(_DEC) + F.coalesce(units, F.lit(0).cast(_DEC))
+
+
+def band_total(
+    s: Bands, scale: float = 1000000.0, exact: bool = False, distinct: bool = False
+) -> Column:
     """Aggregated channels -> the final double: the plain IEEE sum when
-    the group holds an out-of-domain value, the exact hot+wide DECIMAL
+    the group holds an out-of-domain value, the exact ``band_decimal``
     total through the 2^53 split when it holds a wide-band value, else
     the hot sum divided by ``scale`` (1e6 for micro units, 1.0 for unit
     scale). ``exact``: ``s.hot`` is a DECIMAL sum, which also converts
@@ -197,22 +269,9 @@ def band_total(s: Bands, scale: float = 1000000.0, exact: bool = False) -> Colum
         hot = s.hot / scale
     else:
         hot = s.hot.cast("double")
-    total = F.coalesce(s.hot.cast(_DEC), F.lit(0).cast(_DEC)) + s.wide
+    total = dec_to_double(band_decimal(s, scale, distinct), scale)
     return (
-        F.when(s.bad > 0, s.plain)
-        .when(s.nwide > 0, dec_to_double(total, scale))
-        .otherwise(hot)
-    )
-
-
-def band_decimal(s: Bands) -> Column:
-    """Aggregated channels -> the exact DECIMAL(38,0) hot+wide total in
-    micro units (NULL when both bands are). Out-of-domain rows are left
-    out on both engines: a plain-sum fallback would make a ranking on
-    this total engine-dependent."""
-    zero = F.lit(0).cast(_DEC)
-    return F.when(s.hot.isNull() & s.wide.isNull(), F.lit(None)).otherwise(
-        F.coalesce(s.hot, zero) + F.coalesce(s.wide, zero)
+        F.when(s.bad > 0, s.plain).when(s.units.isNotNull(), total).otherwise(hot)
     )
 
 
@@ -240,33 +299,43 @@ def dec_to_double_sql(total: str, scale: float = 1000000.0) -> str:
     return f"{recon} / {scale!r}" if scale != 1.0 else recon
 
 
-def dsum_expr(c: Column) -> Column:
+def dsum_expr(c: Column, distinct: bool = False) -> Column:
     """Unaliased ``dsum`` — for call sites that derive further columns
-    from the exact sum (averages, ratios) before naming them."""
-    return band_total(agg_bands(bands(c)))
+    from the exact sum (averages, ratios) before naming them.
+    ``distinct``: the DISTINCT sum (see ``dsum``)."""
+    s = agg_bands(bands(c, distinct=distinct), distinct=distinct)
+    return band_total(s, distinct=distinct)
 
 
-def bands_sql(x: str, unit: bool = False) -> Bands:
+def bands_sql(x: str, unit: bool = False, distinct: bool = False) -> Bands:
     """SQL twin of ``bands`` (dialect-shared)."""
-    in_wide = f"({x} {WIDE_SAFE_SQL}) AND NOT ({x} {MICRO_SAFE_SQL})"
+    hot_band = f"({x} {MICRO_SAFE_SQL})"
+    mid = f"({x} {MID_SAFE_SQL})"
+    dom = f"({x} {WIDE_SAFE_SQL})"
+    q = f"CAST(floor({x} * 1000000 + 0.5) AS BIGINT)"
     if unit:
-        hot = f"CAST(floor({x}) AS BIGINT)"
-        wide = f"CASE WHEN {in_wide} THEN CAST(floor({x}) AS DECIMAL(38,0)) END"
-    else:
-        hot = f"CAST(floor({x} * 1000000 + 0.5) AS BIGINT)"
-        wide = (
-            f"CASE WHEN ({x} {MID_SAFE_SQL}) AND NOT ({x} {MICRO_SAFE_SQL}) "
-            f"THEN CAST(floor({x} * 1000000 + 0.5) AS DECIMAL(38,0)) "
-            f"WHEN ({x} {WIDE_SAFE_SQL}) AND NOT ({x} {MID_SAFE_SQL}) "
-            f"THEN CAST(floor({x} + 0.5) AS DECIMAL(38,0)) * 1000000 END"
+        fl = f"CAST(floor({x}) AS BIGINT)"
+        hot = f"CASE WHEN {hot_band} THEN {fl} "
+        units = f"CASE WHEN {dom} AND NOT {hot_band} THEN {fl} END"
+    elif distinct:
+        hot = f"CASE WHEN {hot_band} THEN {q} "
+        units = (
+            f"CASE WHEN {hot_band} THEN NULL "
+            f"WHEN {mid} THEN CAST({q} AS DECIMAL(38,0)) "
+            f"WHEN {dom} THEN CAST(floor({x} + 0.5) AS DECIMAL(38,0)) * 1000000 END"
         )
-    return Bands(
-        f"CASE WHEN ({x} {MICRO_SAFE_SQL}) THEN {hot} END",
-        wide,
-        x,
-        f"CASE WHEN NOT ({x} {WIDE_SAFE_SQL}) THEN 1 END",
-        f"CASE WHEN {in_wide} THEN 1 END",
-    )
+    else:
+        hot = (
+            f"CASE WHEN {hot_band} THEN {q} "
+            f"WHEN {mid} THEN {q} - CAST(floor({x}) AS BIGINT) * 1000000 "
+        )
+        units = (
+            f"CASE WHEN {hot_band} THEN NULL "
+            f"WHEN {mid} THEN CAST(floor({x}) AS BIGINT) "
+            f"WHEN {dom} THEN CAST(floor({x} + 0.5) AS BIGINT) END"
+        )
+    hot += f"WHEN {dom} THEN 0 END"
+    return Bands(hot, units, x, f"CASE WHEN NOT {dom} THEN 1 END")
 
 
 def agg_bands_sql(
@@ -280,22 +349,32 @@ def agg_bands_sql(
     'F'"``) appends ``FILTER (WHERE ...)`` to every aggregate for
     pivot-style conditional cells; ``over`` (e.g. ``"w"``) appends
     ``OVER w`` for the window-frame form; ``distinct`` makes each value
-    sum a DISTINCT sum (the bands partition the value space, so per-band
-    distinct sums add up to the global distinct sum)."""
+    sum a DISTINCT sum (over the DISTINCT layout of ``bands_sql``)."""
     f = f" FILTER (WHERE {filter_sql})" if filter_sql else ""
     f += f" OVER {over}" if over else ""
     d = "DISTINCT " if distinct else ""
-    hot = f"CAST({b.hot} AS DECIMAL(38,0))" if exact else b.hot
+    hot, units = b.hot, b.units
+    if exact:
+        hot, units = (f"CAST({v} AS DECIMAL(38,0))" for v in (hot, units))
     return Bands(
         f"sum({d}{hot}){f}",
-        f"sum({d}{b.wide}){f}",
+        f"sum({d}{units}){f}",
         f"sum({d}{b.plain}){f}",
         f"count({b.bad}){f}",
-        f"count({b.nwide}){f}",
     )
 
 
-def band_total_sql(s: Bands, scale: float = 1000000.0, exact: bool = False) -> str:
+def band_decimal_sql(s: Bands, scale: float = 1000000.0, distinct: bool = False) -> str:
+    """SQL twin of ``band_decimal``."""
+    units = f"CAST({s.units} AS DECIMAL(38,0))"
+    if not distinct and scale != 1.0:
+        units = f"{units} * {int(scale)}"
+    return f"(CAST({s.hot} AS DECIMAL(38,0)) + COALESCE({units}, 0))"
+
+
+def band_total_sql(
+    s: Bands, scale: float = 1000000.0, exact: bool = False, distinct: bool = False
+) -> str:
     """SQL twin of ``band_total``. The unguarded CAST of a non-finite or
     absorption-band value would throw in DuckDB where Spark's floor
     silently saturates (same totality gap, opposite failure mode), which
@@ -306,19 +385,11 @@ def band_total_sql(s: Bands, scale: float = 1000000.0, exact: bool = False) -> s
         hot = f"CAST({s.hot} AS BIGINT) / {scale!r}"
     else:
         hot = f"CAST(CAST({s.hot} AS BIGINT) AS DOUBLE)"
-    total = f"(COALESCE(CAST({s.hot} AS DECIMAL(38,0)), 0) + {s.wide})"
+    total = band_decimal_sql(s, scale, distinct)
     return (
         f"CASE WHEN {s.bad} > 0 THEN {s.plain} "
-        f"WHEN {s.nwide} > 0 THEN {dec_to_double_sql(total, scale)} "
+        f"WHEN {s.units} IS NOT NULL THEN {dec_to_double_sql(total, scale)} "
         f"ELSE {hot} END"
-    )
-
-
-def band_decimal_sql(s: Bands) -> str:
-    """SQL twin of ``band_decimal``."""
-    return (
-        f"CASE WHEN {s.hot} IS NULL AND {s.wide} IS NULL THEN NULL "
-        f"ELSE COALESCE({s.hot}, 0) + COALESCE({s.wide}, 0) END"
     )
 
 
@@ -326,7 +397,8 @@ def dsum_sql(x: str, filter_sql: str = "", over: str = "", distinct: bool = Fals
     """SQL twin of ``dsum``, in the dialect SHARED by Spark and DuckDB so
     the same text serves both SQL-path queries and DuckDB oracles; the
     keyword arguments pick the aggregate form (see ``agg_bands_sql``)."""
-    return band_total_sql(agg_bands_sql(bands_sql(x), filter_sql, over, distinct))
+    s = agg_bands_sql(bands_sql(x, distinct=distinct), filter_sql, over, distinct)
+    return band_total_sql(s, distinct=distinct)
 
 
 def dround(c: Column, n: int) -> Column:

@@ -51,9 +51,9 @@ def q_agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = F.col("l_quantity")
     # the full three-band dsum device inside the pivot cell (see
-    # _util.dsum): hot-band BIGINT micro units, DECIMAL(38,0) wide band,
-    # plain IEEE fallback for non-finite/absorption cells — identical to
-    # the oracle's FILTER-ed dsum_sql cells
+    # _util.dsum): BIGINT hot and wide-band channels, plain IEEE fallback
+    # for non-finite/absorption cells — identical to the oracle's
+    # FILTER-ed dsum_sql cells
     guarded = dsum_expr(q)
     out = (
         li.groupBy("l_returnflag")
@@ -831,7 +831,7 @@ def q_agg_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dsum partials (see _util.dsum), each channel an associative-
     # commutative sum/count, so the salt regrouping is exact and the
     # result bit-equal to the oracle's one-stage dsum_sql
-    parts = ("psum", "pwide", "pplain", "pbad", "pnwide")
+    parts = ("phot", "punits", "pplain", "pbad")
     partial = salted.groupBy("event_type", "salt").agg(
         F.count("*").alias("pn"),
         *(a.alias(n) for a, n in zip(agg_bands(bands(F.col("value"))), parts)),
@@ -2144,10 +2144,9 @@ GROUP BY l_returnflag, l_linestatus
         "(DuckDB's int128->double cast misrounds past 2^53), so both "
         "engines produce the identical double and the hash gate applies. "
         "Cost: decimal aggregation runs outside the primitive-long fast "
-        "path (~2x on the sum operator itself, profiled in _util.dsum's "
-        "note), but measured END-TO-END at the 10x tier the wide form "
-        "matches the long form (0.31 s vs 0.30 s min-of-5) — the "
-        "parquet scan dominates, so unbounded-scale exactness is close "
+        "path (see the variant table in _util.dsum's note), but "
+        "measured END-TO-END at the 10x tier the wide form matches the "
+        "long form (0.31 s vs 0.30 s min-of-5) — the parquet scan dominates, so unbounded-scale exactness is close "
         "to free here. Same plan shape as the flagship: map-side "
         "partial decimal sums, 6-group shuffle."
     ),
@@ -2156,9 +2155,9 @@ def q_agg_groupby_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
 
     def exact_sum(c: Column, alias: str) -> Column:
-        # the dsum device with the hot band accumulating in DECIMAL(38,0)
-        # — exact past 2^53 micro-units, which is this query's reason to
-        # exist; every decimal->double conversion goes through the 2^53
+        # the dsum device with both integer channels accumulating in
+        # DECIMAL(38,0) — exact past 2^63 micro-units, which is this
+        # query's reason to exist; every decimal->double conversion goes through the 2^53
         # split (_util.dec_to_double)
         return band_total(agg_bands(bands(c), exact=True), exact=True).alias(alias)
 

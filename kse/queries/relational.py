@@ -19,10 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kse.queries._util import (
-    agg_bands,
-    band_total,
-    bands,
     dsum,
+    dsum_expr,
     grand_total_if_empty,
     r4,
     r6,
@@ -936,19 +934,18 @@ FROM lineitem GROUP BY l_returnflag
 """,
     doc="COUNT/SUM DISTINCT (expand+two-phase aggregate under the hood; "
     "prefer approx_count_distinct at 100 TB — see q_agg_approx_distinct). "
-    "The distinct sum runs the full three-band dsum device with DISTINCT "
-    "per band: the bands partition the value space, so per-band distinct "
-    "sums add up to the global distinct sum; the plain branch is "
+    "The distinct sum runs the dsum device's DISTINCT layout (hot band, "
+    "injective wide channel): the bands partition the value space, so "
+    "per-band distinct sums add up to the global distinct sum; the plain branch is "
     "propagation-dominant (a non-finite distinct set sums to ±Inf/NaN "
     "identically on both engines).",
 )
 def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
-    distinct_sums = agg_bands(bands(F.col("l_quantity")), F.sum_distinct)
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
-        band_total(distinct_sums).alias("sum_dist_qty"),
+        dsum_expr(F.col("l_quantity"), distinct=True).alias("sum_dist_qty"),
     )
 
 

@@ -290,7 +290,7 @@ def q_win_sliding_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # any Inf/NaN/absorption value uses the plain IEEE sum on both
     # engines (the result is ±Inf/NaN regardless of the engine's frame
     # accumulation strategy), finite 9e9..9e15 values go through the
-    # exact DECIMAL(38,0) wide band
+    # exact wide band
     frame = agg_bands(bands(F.col("l_extendedprice")))
     frame_sum = band_total(Bands(*(a.over(w) for a in frame)))
     return li.select(

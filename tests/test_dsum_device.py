@@ -4,13 +4,14 @@ Round-5 advisor finding: the old device fell back to a plain IEEE double
 sum for ANY |x| > 9e9, including huge-but-FINITE values whose group sum
 does not overflow — there the result is order-dependent under Spark's
 partial aggregation and need not bit-match DuckDB's sequential sum. The
-fix adds an exact DECIMAL(38,0) micro/unit band for finite 9e9..9e15 and
-restricts the plain-IEEE fallback to non-finite / absorption-band groups.
+fix adds an exact micro/unit band for finite 9e9..9e15 (carried in two
+BIGINT channels, combined in DECIMAL(38,0) once per group) and restricts
+the plain-IEEE fallback to non-finite / absorption-band groups.
 
 These tests pin the device head-to-head against its SQL twin on BOTH
 engines (DuckDB oracle AND spark.sql of the same text — the device is
 dialect-shared), in every form a query uses it (plain, window frame,
-DISTINCT, FILTER, salted two-stage, unit scale, DECIMAL hot band,
+DISTINCT, FILTER, salted two-stage, unit scale, DECIMAL-accumulating,
 DECIMAL total), across repartitionings (order independence), for every
 band and boundary, including the decimal->double 2^53 split that works
 around DuckDB's misrounded int128->double cast.
@@ -25,6 +26,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kse import registry
 from kse.queries._util import (
     Bands,
     agg_bands,
@@ -39,6 +41,8 @@ from kse.queries._util import (
     dsum_expr,
     dsum_sql,
 )
+
+from .conftest import SF_T2
 
 CASES = {
     "hot": [0.5, 123.45, -67.89, 0.000001],
@@ -62,6 +66,16 @@ CASES = {
     "neg_total": [-5.0e14, -9.0e12 - 1024.0, 2.5e13, -42.5],
     "neg_zero": [-0.0, 0.0],
     "denormal": [5e-324, -2.5e-308, 1.0],
+    # wide values whose truncation and rounding differ (floor(x) vs
+    # floor(x+0.5) in the unit-scale wide band)
+    "wide_frac": [1e10 + 0.75, -1e10 - 0.75],
+    # hot-band total past 2^53 micro units (1.8e16 + 125000)
+    "hot_past_2_53": [9.0e9, 9.0e9, 0.125],
+    # mid-band value whose micro remainder rounds up to a whole unit
+    "mid_round_up": [1e10 + 0.9999996],
+    # a wide row's micro remainder (250000) equals a hot row's micro
+    # value: a DISTINCT sum must keep both
+    "distinct_remainder": [1e10 + 0.25, 0.25, 0.25],
 }
 
 
@@ -157,7 +171,7 @@ FORMS = {
         "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)",
     ),
     "distinct": (
-        _grouped(lambda x: band_total(agg_bands(bands(x), F.sum_distinct))),
+        _grouped(lambda x: dsum_expr(x, distinct=True)),
         _per_g(dsum_sql("x", distinct=True)),
     ),
     "filter_pivot_cell": (_pivot_form, _per_g(dsum_sql("x", "i % 2 = 0"))),
@@ -231,3 +245,77 @@ def test_dsum_sql_filter_variant(spark, band_df):
         [(g, v) for g, vals in CASES.items() for v in vals],
     )
     assert con.execute(f"SELECT {filt} FROM tt").fetchone()[0] == got
+
+
+def test_dsum_overflow_raises_never_wraps(spark):
+    """The documented bound: 1,024 rows at the band edge (9e15) sum
+    exactly; the 1,025th takes the BIGINT ``units`` sum past 2^63-1, and
+    Spark must raise ARITHMETIC_OVERFLOW (ANSI) rather than wrap or turn
+    the group NULL."""
+    edge = spark.range(1024).select(F.lit(9.0e15).alias("x"))
+    got = edge.agg(dsum(F.col("x"), "s")).collect()[0].s
+    want = duckdb.sql(
+        f"SELECT {dsum_sql('x')} FROM (SELECT 9.0e15::DOUBLE AS x FROM range(1024))"
+    ).fetchone()[0]
+    assert got == want == 9.216e18
+    over = spark.range(1025).select(F.lit(9.0e15).alias("x"))
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        over.agg(dsum(F.col("x"), "s")).collect()
+
+
+def test_exact_form_past_2_64_micro_units(spark):
+    """``exact=True`` converts a hot-band DECIMAL total past 2^64 micro
+    units through the 2^53 split on both engines. This total is one that
+    DuckDB's direct int128->double cast misrounds, so a twin that casts
+    straight to double diverges here (the column form cannot show it:
+    Spark's own DECIMAL->double cast is correctly rounded)."""
+    rows = [9.0e9] * 2100 + [130864196.470804]
+    micro = sum(math.floor(v * 1e6 + 0.5) for v in rows)
+    assert micro >= 2**64
+    want = float(micro) / 1e6
+    df = spark.createDataFrame([(v,) for v in rows], "x double")
+    column = band_total(agg_bands(bands(F.col("x")), exact=True), exact=True)
+    assert df.agg(column.alias("s")).collect()[0].s == want
+    sql = band_total_sql(agg_bands_sql(bands_sql("x"), exact=True), exact=True)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE big_tt (x DOUBLE)")
+    con.executemany("INSERT INTO big_tt VALUES (?)", [(v,) for v in rows])
+    assert con.execute(f"SELECT {sql} FROM big_tt").fetchone()[0] == want
+    df.createOrReplaceTempView("big_tt")
+    assert spark.sql(f"SELECT {sql} AS s FROM big_tt").collect()[0].s == want
+
+
+def _plan_nodes(p):
+    """Every node of an executed plan, through AQE wrappers and query
+    stages (which the plain ``children`` walk stops at)."""
+    if p.nodeName() == "AdaptiveSparkPlan":
+        yield from _plan_nodes(p.executedPlan())
+        return
+    yield p
+    if p.getClass().getSimpleName().endswith("QueryStageExec"):
+        yield from _plan_nodes(p.plan())
+        return
+    kids = p.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_flagship_partial_aggregate_has_no_decimal_buffer(spark):
+    """q_agg_groupby's map-side HashAggregate holds four aggregates per
+    dsum (4 sums) plus 3 avg and 1 count = 20 functions, and no
+    DECIMAL(38,0) buffer: the wide band rides in BIGINT channels and
+    meets DECIMAL only in the final per-group projection."""
+    df = registry.all_queries()["q_agg_groupby"].fn(spark, SF_T2)
+    df.collect()
+    partial = [
+        n
+        for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "HashAggregate"
+        and n.aggregateExpressions().apply(0).mode().toString() == "Partial"
+    ]
+    assert len(partial) == 1
+    agg = partial[0]
+    assert agg.aggregateExpressions().size() == 20
+    buf = agg.aggregateBufferAttributes()
+    types = {buf.apply(i).dataType().simpleString() for i in range(buf.size())}
+    assert "decimal(38,0)" not in types, types

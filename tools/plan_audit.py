@@ -29,8 +29,8 @@ REQUIRED = {
         ("partial (map-side) aggregation", r"partial_(sum|count)"),
         ("column pruning reaches parquet", r"ReadSchema: [^\n]*l_returnflag"),
         ("whole-stage codegen", r"\*\(\d+\)"),
-        # the dsum three-band device adds ~5 CASE aggregates per logical
-        # sum; if generated code ever exceeds hugeMethodLimit, Spark
+        # the dsum three-band device adds 4 aggregates per logical sum;
+        # if generated code ever exceeds hugeMethodLimit, Spark
         # silently drops the HashAggregate out of codegen (no asterisk on
         # that node) — this catches the fallback the moment a wider
         # aggregate tips it over
