@@ -10,10 +10,10 @@ Two interchangeable backends behind one ``foreachBatch`` interface:
   Code-complete but NOT runnable in this container (no ES, no network —
   verified at survey time); exercised in tests through a mock transport.
 - ``JsonlIndexer``: offline stand-in with the SAME semantics — one
-  directory per index, one JSONL file per (batch, partition), documents
-  keyed by ``_id``; a compaction view applies last-write-wins per _id, so
-  replays of a micro-batch (Spark's recovery behavior) are idempotent
-  exactly as they are against ES.
+  directory per index, one JSONL file per micro-batch, documents keyed by
+  ``_id``; a compaction view applies last-write-wins per _id, so replays
+  of a micro-batch (Spark's recovery behavior) are idempotent exactly as
+  they are against ES.
 
 Why foreachBatch and not a custom sink: it gives the batch-DataFrame API
 (joins, repartition) per micro-batch plus a batch_id for exactly-once
@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
@@ -40,26 +41,37 @@ def _rows_to_actions(rows: Iterable, id_col: str) -> Iterable[tuple[str, dict]]:
 
 @dataclass
 class JsonlIndexer:
-    """Filesystem 'index': ``{root}/{index}/batch=<id>/part-*.txt`` JSONL.
+    """Filesystem 'index': ``{root}/{index}/batch=<id>/part-00000.txt`` JSONL.
 
-    One directory per micro-batch, overwritten on replay (Spark's file
-    commit protocol makes the directory write atomic), + last-write-wins
-    read view per ``_id`` == ES upsert semantics. The write path is pure
-    JVM — ``to_json(struct(_id, _source))`` into a text sink — so no row
-    ever crosses into Python (the previous ``batch_df.rdd`` formulation
-    pickled every row through a Python worker; measured ~25% of the
-    bench drain's addBatch time at 100k events). The ES backend below
-    keeps its per-partition Python fan-out because its job IS to POST
-    from executors; this backend's job is just bytes on disk.
+    One directory per micro-batch, replaced on replay, + last-write-wins
+    read view per ``_id`` == ES upsert semantics. Spark renders the
+    documents (``to_json(struct(_id, _source))``, no row pickled through a
+    Python worker); the driver collects them as Arrow and writes the file.
+    That is safe because a micro-batch emits only the windows it updated,
+    a set bounded by the time span it touches x 5 event types, not by the
+    event count (~15 documents a batch in perfbench's stream_replay, ~21k
+    in bench.py's one-batch sf0.1 drain). It skips the Hadoop text
+    writer's commit protocol (task-attempt directories, ``.crc`` files,
+    ``_SUCCESS``), ~9 forked ``chmod`` calls a batch on a host without
+    libhadoop (DESIGN.md, "Local Hadoop FS forks chmod per file"). With
+    one state store, the traced stream_replay read 1 file a batch instead
+    of 4, 7 tasks a replay instead of 19, and addBatch 0.37 s instead of
+    0.61 s. The ES backend below keeps its per-partition fan-out because
+    its job IS to POST from executors.
+
+    Atomicity: the file is written into ``_tmp.batch=<id>`` and that
+    directory is renamed into place. ``read_index`` skips ``_``/``.``
+    entries, so a crash before the rename shows nothing; Spark replays a
+    batch whose foreachBatch did not return, and the replay clears the
+    leftover first.
     """
 
     root: str
 
     def foreach_batch(self, index: str, id_col: str) -> Callable[[DataFrame, int], None]:
-        root = self.root
+        index_dir = os.path.join(self.root, index)
 
         def _write(batch_df: DataFrame, batch_id: int) -> None:
-            out_dir = os.path.join(root, index, f"batch={batch_id:08d}")
             # ignoreNullFields=false: Spark's to_json default DROPS
             # null-valued fields, which would change the document shape vs
             # the ES upsert contract (a NULL field must arrive as null, and
@@ -71,9 +83,18 @@ class JsonlIndexer:
                 ),
                 {"ignoreNullFields": "false"},
             )
-            # mode=overwrite: a replayed micro-batch rewrites ITS OWN
-            # directory => idempotent, same contract as the ES upserts
-            batch_df.select(payload.alias("value")).write.mode("overwrite").text(out_dir)
+            docs = batch_df.select(payload.alias("value")).toArrow().column("value")
+            name = f"batch={batch_id:08d}"
+            out_dir = os.path.join(index_dir, name)
+            tmp_dir = os.path.join(index_dir, f"_tmp.{name}")
+            shutil.rmtree(tmp_dir, ignore_errors=True)
+            os.makedirs(tmp_dir)
+            with open(os.path.join(tmp_dir, "part-00000.txt"), "w", encoding="utf-8") as f:
+                f.writelines(f"{doc}\n" for doc in docs.to_pylist())
+            # a replayed micro-batch replaces ITS OWN directory =>
+            # idempotent, same contract as the ES upserts
+            shutil.rmtree(out_dir, ignore_errors=True)
+            os.rename(tmp_dir, out_dir)
 
         return _write
 
@@ -89,8 +110,8 @@ class JsonlIndexer:
             return out
         for batch in sorted(os.listdir(out_dir)):
             batch_dir = os.path.join(out_dir, batch)
-            if not os.path.isdir(batch_dir):
-                continue
+            if batch.startswith(("_", ".")) or not os.path.isdir(batch_dir):
+                continue  # an unfinished write's temporary directory
             for fname in sorted(os.listdir(batch_dir)):
                 if fname.startswith(("_", ".")):
                     continue  # _SUCCESS / commit markers

@@ -34,16 +34,19 @@ class PipelineConfig:
     event_types: tuple[str, ...] = ("click", "view", "purchase", "signup", "error")
     # Streaming state-store count = spark.sql.shuffle.partitions AT QUERY
     # START, pinned into the checkpoint's offset log thereafter (a resumed
-    # query keeps the count it was created with). None = the cluster's
-    # defaultParallelism: one task wave of store commits per micro-batch.
-    # Inheriting the session's 32 on a 4-core host spread ~20 state rows
-    # over 32 stores, 8 waves of near-empty commits per batch; sizing to
-    # the 4 cores took perfbench's stream_replay from a median 595 to 1386
-    # events/s over ten interleaved pairs (latency p50 2.24 -> 0.94 s;
-    # traced state commit 3.23 -> 0.45 s). An explicit value wins: a
-    # deployment whose keyspace outgrows one wave sizes it up, with a NEW
-    # checkpoint.
-    shuffle_partitions: int | None = None
+    # query keeps the count it was created with). One store is enough: the
+    # state key is (window, event_type) and the partial aggregate runs
+    # before the exchange, so the state holds time span x 5 types rows
+    # whatever the event rate (20 rows in perfbench's stream_replay; the r8
+    # sweep in DESIGN.md read 1 store <= 2 stores even at 21k rows). Each
+    # store is a fixed commit cost per micro-batch: every delta file it
+    # writes costs a forked `chmod` on a host without libhadoop (DESIGN.md,
+    # "local Hadoop FS forks chmod per file"), and concurrent commits
+    # contend: perfbench's traced stream_replay on 4 cores read 380 ms of
+    # commit time per micro-batch summed over 4 stores, 38 ms for one. An
+    # explicit value wins: a deployment whose keyspace outgrows one task
+    # sizes it up, with a NEW checkpoint.
+    shuffle_partitions: int = 1
     # Spark runs one extra NO-DATA micro-batch after an availableNow drain
     # to advance the watermark and evict expired state — measured at ~35%
     # of a warm 100k-event drain (`git show 33688ea:tools/stream_profile.py`:
@@ -128,13 +131,10 @@ def run_offline(
     # checkpoint; scope the state-store sizing to this query by setting it
     # around .start() and restoring the session value immediately after.
     # Same scoping for the no-data flush batch knob (see PipelineConfig).
-    partitions = cfg.shuffle_partitions
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     _ND_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev_nd = spark.conf.get(_ND_KEY)
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
     if cfg.no_data_microbatch is not None:
         spark.conf.set(_ND_KEY, str(cfg.no_data_microbatch).lower())
     try:

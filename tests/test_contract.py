@@ -127,6 +127,31 @@ def test_bare_session_is_normalized(spark):
     assert bare.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
+def test_plan_audit_blanks_build_order_numbers():
+    """PLANS.md prints plans with expression ids, exchange plan ids and
+    PySpark's lambda-name counters blanked, so regenerating it differs only
+    where a plan changed; everything else in the plan text is kept."""
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_audit",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "plan_audit.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    raw = (
+        "Exchange hashpartitioning(l_orderkey#0L, 32), ENSURE_REQUIREMENTS, [plan_id=132]\n"
+        "filter(split(text#417, , -1), lambdafunction((lambda x_2#5722 > 0), lambda x_2#5722, false))"
+        " AS n_2#9, *(2) HashAggregate(keys=[acc#367])"
+    )
+    assert mod.normalize(raw) == (
+        "Exchange hashpartitioning(l_orderkey#nL, 32), ENSURE_REQUIREMENTS, [plan_id=n]\n"
+        "filter(split(text#n, , -1), lambdafunction((lambda x#n > 0), lambda x#n, false))"
+        " AS n_2#n, *(2) HashAggregate(keys=[acc#n])"
+    )
+
+
 def test_plan_audit_properties_hold(spark):
     """Every optimizer property tools/plan_audit.py requires (pushdown,
     broadcast choice, WindowGroupLimit, TakeOrdered, codegen) must hold —

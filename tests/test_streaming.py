@@ -233,6 +233,9 @@ def test_pipeline_offline_end_to_end(spark, tmp_events_dir, tmp_path):
     assert by_key["1704103200000000:click"]["n_events"] == 1
     assert by_key["1704103200000000:purchase"]["sum_value"] == 5.0
     assert by_key["1704103800000000:click"]["n_events"] == 1
+    # one data file per micro-batch, no Hadoop commit markers
+    batches = sorted((tmp_path / "index" / "event_windows").iterdir())
+    assert batches and all([p.name for p in b.iterdir()] == ["part-00000.txt"] for b in batches)
 
     # replay with a fresh checkpoint: same doc ids overwrite -> idempotent
     q2 = run_offline(spark, tmp_events_dir, index_root, str(tmp_path / "ckpt2"))
@@ -313,9 +316,9 @@ def test_pipeline_counts_malformed_lines(spark, tmp_events_dir, tmp_path):
 
 
 def test_pipeline_sizes_state_stores_to_parallelism(spark, tmp_events_dir, tmp_path):
-    """With the default config the window's state stores number one task
-    wave (defaultParallelism), whatever spark.sql.shuffle.partitions the
-    session carries, and the session value is restored after start."""
+    """With the default config the window runs one state store, whatever
+    spark.sql.shuffle.partitions or defaultParallelism the session has,
+    and the session value is restored after start."""
     session_value = spark.conf.get("spark.sql.shuffle.partitions")
     write_event_chunk(tmp_events_dir, "000.json", [ev(1, "2024-01-01T10:01:00Z")])
     q = run_offline(spark, tmp_events_dir, str(tmp_path / "index"), str(tmp_path / "ckpt"))
@@ -323,9 +326,116 @@ def test_pipeline_sizes_state_stores_to_parallelism(spark, tmp_events_dir, tmp_p
     q.awaitTermination(120)
     data = [p for p in q.recentProgress if p.numInputRows > 0]
     assert len(data) == 1
-    assert [op.numStateStoreInstances for op in data[0].stateOperators] == [
-        spark.sparkContext.defaultParallelism
+    assert [op.numStateStoreInstances for op in data[0].stateOperators] == [1]
+
+
+def test_one_state_store_indexes_what_four_do(spark, tmp_events_dir, tmp_path):
+    """The single default store holds the same window state as the old
+    default on a 4-core host (four stores): three micro-batches spread
+    over windows and types, both indexes equal."""
+    write_event_chunk(tmp_events_dir, "000.json", [
+        ev(1, "2024-01-01T10:01:00Z", etype="click", value=1.5),
+        ev(2, "2024-01-01T10:02:00Z", etype="purchase", value=5.0),
+        ev(3, "2024-01-01T10:09:00Z", etype="view", value=0.25),
+    ])
+    write_event_chunk(tmp_events_dir, "001.json", [
+        ev(4, "2024-01-01T10:12:00Z", etype="click", value=2.0),
+        ev(5, "2024-01-01T10:05:00Z", etype="click", value=0.5),
+        ev(6, "2024-01-01T10:31:00Z", etype="signup", value=1.0),
+        ev(7, "2024-01-01T10:33:00Z", etype="error", value=3.0),
+    ])
+    write_event_chunk(tmp_events_dir, "002.json", [
+        ev(8, "2024-01-01T10:34:00Z", etype="view", value=1.0),
+        ev(9, "2024-01-01T10:41:00Z", etype="purchase", value=7.5),
+    ])
+    indexes = {}
+    for parts in (None, 4):
+        cfg = PipelineConfig() if parts is None else PipelineConfig(shuffle_partitions=parts)
+        root = str(tmp_path / f"index-{parts}")
+        q = run_offline(spark, tmp_events_dir, root, str(tmp_path / f"ckpt-{parts}"), cfg)
+        q.awaitTermination(120)
+        stores = {sum(op.numStateStoreInstances for op in p.stateOperators)
+                  for p in q.recentProgress if p.numInputRows > 0}
+        assert stores == {parts or 1}
+        indexes[parts] = JsonlIndexer(root).read_index("event_windows")
+    assert indexes[None] == indexes[4]
+    assert len(indexes[None]) == 8
+    assert indexes[None]["1704103200000000:click"] == {
+        "doc_id": "1704103200000000:click",
+        "window_start": "2024-01-01T10:00:00.000Z",
+        "window_end": "2024-01-01T10:10:00.000Z",
+        "event_type": "click",
+        "n_events": 2,
+        "sum_value": 2.0,
+    }
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id string, n long, label string")
+
+
+def test_jsonl_indexer_replay_replaces_the_batch(spark, tmp_path):
+    """A replayed batch id leaves only its second write's documents, in
+    one data file and without Hadoop commit markers."""
+    indexer = JsonlIndexer(str(tmp_path))
+    write = indexer.foreach_batch("docs", "doc_id")
+    write(_docs(spark, [("a", 1, "x"), ("b", 2, "y")]), 0)
+    write(_docs(spark, [("c", 3, "z")]), 1)
+    write(_docs(spark, [("b", 20, "y2"), ("d", 4, "w")]), 1)
+    assert indexer.read_index("docs") == {
+        "a": {"doc_id": "a", "n": 1, "label": "x"},
+        "b": {"doc_id": "b", "n": 20, "label": "y2"},
+        "d": {"doc_id": "d", "n": 4, "label": "w"},
+    }
+    index_dir = tmp_path / "docs"
+    assert sorted(p.name for p in index_dir.iterdir()) == ["batch=00000000", "batch=00000001"]
+    for batch in index_dir.iterdir():
+        assert [p.name for p in batch.iterdir()] == ["part-00000.txt"]
+
+
+def test_jsonl_indexer_ignores_an_unfinished_write(spark, tmp_path, monkeypatch):
+    """A crash before the rename leaves a temporary directory that
+    read_index does not see; the replay of that batch clears it."""
+    import kse.sinks.indexer as sink
+
+    indexer = JsonlIndexer(str(tmp_path))
+    write = indexer.foreach_batch("docs", "doc_id")
+    write(_docs(spark, [("a", 1, "x")]), 0)
+
+    def crash(src, dst):
+        raise OSError("simulated crash before the rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(sink.os, "rename", crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            write(_docs(spark, [("a", 10, "x2"), ("b", 2, "y")]), 1)
+    assert (tmp_path / "docs" / "_tmp.batch=00000001" / "part-00000.txt").exists()
+    assert indexer.read_index("docs") == {"a": {"doc_id": "a", "n": 1, "label": "x"}}
+
+    write(_docs(spark, [("a", 10, "x2"), ("b", 2, "y")]), 1)
+    assert sorted(p.name for p in (tmp_path / "docs").iterdir()) == [
+        "batch=00000000", "batch=00000001"
     ]
+    assert indexer.read_index("docs")["a"]["n"] == 10
+
+
+def test_jsonl_indexer_empty_batch_and_nulls(spark, tmp_path):
+    """An empty micro-batch writes an empty file and changes nothing; a
+    NULL field arrives as null, and a NULL id still carries an _id key."""
+    indexer = JsonlIndexer(str(tmp_path))
+    write = indexer.foreach_batch("docs", "doc_id")
+    write(_docs(spark, [("a", None, None), (None, 5, "no-id")]), 0)
+    write(_docs(spark, []), 1)
+    assert (tmp_path / "docs" / "batch=00000001" / "part-00000.txt").read_text() == ""
+    lines = (tmp_path / "docs" / "batch=00000000" / "part-00000.txt").read_text().splitlines()
+    assert sorted(lines) == sorted([
+        '{"_id":"a","_source":{"doc_id":"a","n":null,"label":null}}',
+        '{"_id":null,"_source":{"doc_id":null,"n":5,"label":"no-id"}}',
+    ])
+    assert indexer.read_index("docs") == {
+        "a": {"doc_id": "a", "n": None, "label": None},
+        None: {"doc_id": None, "n": 5, "label": "no-id"},
+    }
 
 
 def test_es_bulk_indexer_payloads(spark, tmp_path):

@@ -58,8 +58,8 @@ def test_checkpoint_restart_recovers_state(spark, tmp_events_dir, tmp_path):
 
 def test_restart_keeps_pinned_state_store_count(spark, tmp_events_dir, tmp_path):
     """The state-store count is fixed when a checkpoint is created: a query
-    started with 3 stores and resumed with the default config (one store
-    per core) still runs 3, and the window's state carries across."""
+    started with 3 stores and resumed with the default config (one store)
+    still runs 3, and the window's state carries across."""
     ckpt = str(tmp_path / "ckpt")
     index_root = str(tmp_path / "index")
 

@@ -368,6 +368,23 @@ FORBIDDEN = {
     ],
 }
 
+# Numbers a session hands out in build order: expression ids (#123),
+# exchange plan ids, and the counter PySpark appends to a Python lambda's
+# variable name (x_2). They change whenever an earlier query changes, so
+# PLANS.md prints them blanked (the patterns above match the raw plan) and
+# a regeneration differs only where a plan did.
+_VOLATILE = [
+    (re.compile(r"#\d+"), "#n"),
+    (re.compile(r"plan_id=\d+"), "plan_id=n"),
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1"),
+]
+
+
+def normalize(plan: str) -> str:
+    for pattern, repl in _VOLATILE:
+        plan = pattern.sub(repl, plan)
+    return plan
+
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -402,7 +419,7 @@ def main() -> None:
             f"## {name}\n\n| property | status |\n| --- | --- |\n"
             + "\n".join(rows)
             + "\n\n```\n"
-            + plan.strip()[:4000]
+            + normalize(plan).strip()[:4000]
             + "\n```\n"
         )
 
